@@ -11,19 +11,14 @@ import org.apache.spark.sql.functions._
   * explicit here rather than an import side effect.
   *
   * Re-runs are idempotent by construction: deterministic uuid5 keys, keep-
-  * last dedupe, and union-accumulate dimensions that read their own
-  * previous output (the reference's `self.users_df` instance state, made
-  * durable). Every entity write goes through the one-generation rotation
-  * sink and reports before/after row counts (the A1/A3 audits). */
+  * last dedupe, and union-accumulate dimensions built on the stored
+  * generation — current, else the backup a crash left ([[Sinks.readGeneration]];
+  * the reference's `self.users_df` instance state, made durable). Every
+  * entity write is a [[Sinks.commit]] (stage → rotate → rename, one backup
+  * generation kept) and reports before/after row counts (the A1/A3 audits). */
 object Runner {
 
   final case class Audit(entity: String, rowsIn: Long, rowsOut: Long)
-
-  private def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir)) else None
-  }
 
   private def rawOrNone(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
@@ -75,9 +70,9 @@ object Runner {
     val reposClean = sink("repos", Transform.cleanRepos(reposRawObs),
       reposIn.get("n").asInstanceOf[Long])
 
-    val owners = sink("owners",
+    sink("owners",
       Transform.cleanOwners(reposClean,
-        readIfExists(spark, s"$outDir/owners_clean_backup")),
+        Sinks.readGeneration(spark, s"$outDir/owners_clean")),
       rowsOut("repos"))
 
     rawOrNone(spark, s"$rawDir/branches_raw.json", Schemas.branchesRaw)
@@ -96,11 +91,10 @@ object Runner {
           iIn.get("n").asInstanceOf[Long])
         sink("users",
           Transform.cleanUsers(issuesClean,
-            readIfExists(spark, s"$outDir/users_clean_backup")),
+            Sinks.readGeneration(spark, s"$outDir/users_clean")),
           rowsOut("issues"))
       }
 
-    val _ = owners
     audits
   }
 

@@ -1,68 +1,72 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** File sinks with the reference's one-generation backup rotation
-  * (extract.py:23-34, transform.py:41-55): delete old backup, rename
-  * current to backup, write new. Spark writes directories, not files, so
-  * the rotation swaps directories via Hadoop FileSystem renames — atomic
-  * on HDFS-like stores, and exactly the generation semantics the reference
-  * gets from os.rename. */
+  * (extract.py:23-34, transform.py:41-55). Every file write goes through
+  * one protocol, [[commit]]: stage each output to `<dir>_staging`, then
+  * per output rotate (delete `<dir>_backup`, rename `<dir>` to it) and
+  * rename the staged directory to `<dir>`. Staging first means a frame
+  * may read the generation it replaces, and a failed write leaves both
+  * generations untouched. Reads go through [[readGeneration]], which
+  * recovers from the one crash window the swap has. Spark writes
+  * directories, not files, so the swap uses Hadoop FileSystem renames —
+  * atomic on HDFS-like stores, and exactly the generation semantics the
+  * reference gets from os.rename. */
 object Sinks {
 
-  def rotate(spark: SparkSession, dir: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fileSystem(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"could not rename $from to $to")
+
+  private def rotate(fs: FileSystem, dir: String): Unit = {
     val current = new Path(dir)
     val backup = new Path(dir + "_backup")
     if (fs.exists(current)) {
       if (fs.exists(backup)) fs.delete(backup, true)
-      fs.rename(current, backup)
+      rename(fs, current, backup)
+    }
+  }
+
+  /** The current parquet generation of `dir`. A death between rotate and
+    * rename in [[commit]] leaves `dir` missing with the previous
+    * generation intact in `dir_backup`; that one is returned then, so a
+    * re-run builds on it instead of silently reinitializing (which would
+    * drop every accumulated key). None when neither exists. */
+  def readGeneration(spark: SparkSession, dir: String): Option[DataFrame] =
+    Seq(dir, dir + "_backup")
+      .find(d => fileSystem(spark, d).exists(new Path(d)))
+      .map(spark.read.parquet(_))
+
+  /** Write every `(dir, frame)` output to `<dir>_staging`, then rotate
+    * and rename each one in the order given. All frames are materialized
+    * before any generation moves, so callers order the swaps for their
+    * own crash windows (see the incremental-dedup sink). */
+  def commit(outputs: Seq[(String, DataFrame)], format: String = "parquet"): Unit = {
+    for ((dir, df) <- outputs)
+      df.write.mode("overwrite").format(format).save(dir + "_staging")
+    for ((dir, df) <- outputs) {
+      val fs = fileSystem(df.sparkSession, dir)
+      rotate(fs, dir)
+      rename(fs, new Path(dir + "_staging"), new Path(dir))
     }
   }
 
   /** Parquet is the engine-native clean-layer format. */
-  def writeParquetWithRotation(df: DataFrame, dir: String): Unit = {
-    rotate(df.sparkSession, dir)
-    df.write.mode("overwrite").parquet(dir)
-  }
+  def writeParquetWithRotation(df: DataFrame, dir: String): Unit =
+    commit(Seq(dir -> df))
 
-  /** CSV for reference-faithful clean output (transform.py:41-55 wrote
-    * CSV); header on, UTF-8, same rotation. */
-  def writeCsvWithRotation(df: DataFrame, dir: String): Unit = {
-    rotate(df.sparkSession, dir)
-    df.write.mode("overwrite").option("header", "true").csv(dir)
-  }
-
-  /** Raw-layer JSON sink (extract.py:23-34 wrote pretty JSON). */
-  def writeJsonWithRotation(df: DataFrame, dir: String): Unit = {
-    rotate(df.sparkSession, dir)
-    df.write.mode("overwrite").json(dir)
-  }
-
-  /** ORC with the same rotation contract — for warehouses standardized
+  /** ORC with the same generation contract — for warehouses standardized
     * on ORC (Hive-lineage stacks) rather than parquet; Spark's reader
     * gives ORC the same pushdown/pruning treatment, asserted in
     * SinksExtractSpec. */
-  def writeOrcWithRotation(df: DataFrame, dir: String): Unit = {
-    rotate(df.sparkSession, dir)
-    df.write.mode("overwrite").orc(dir)
-  }
+  def writeOrcWithRotation(df: DataFrame, dir: String): Unit =
+    commit(Seq(dir -> df), "orc")
 
-  /** Key-matched MERGE/upsert into a parquet warehouse table — the
-    * reference's intended load (load.py:57 "githubIDs … can be dropped"
-    * TODO; PK/UNIQUE DDL at migrations/001_core_schema.sql:46-66), which
-    * it never shipped. Semantics: incoming rows replace same-key existing
-    * rows and append new keys; existing rows with unmatched keys survive.
-    * Because keys are deterministic (uuid5 over natural keys), re-merging
-    * the same batch is a no-op — the pipeline's idempotence invariant,
-    * asserted in SinksMergeSpec.
-    *
-    * Shape at 100 TB: one left-anti shuffle join keyed on the merge key.
-    * On a real warehouse, bucket the table by the key so the anti join
-    * co-locates without re-shuffling the big side, or hand the same
-    * staging frame to a MERGE-capable store (Delta/Iceberg/JDBC MERGE);
-    * the rotation keeps one previous generation either way. */
   /** The MERGE plan itself, storage-free: incoming rows replace same-key
     * existing rows, new keys append, unmatched existing keys survive.
     * Idempotent by construction — `mergeFrames(mergeFrames(b, u), u)` ≡
@@ -77,27 +81,24 @@ object Sinks {
         keyCols, "left_anti")
       .unionByName(incoming)
 
+  /** Key-matched MERGE/upsert into a parquet warehouse table — the
+    * reference's intended load (load.py:57 "githubIDs … can be dropped"
+    * TODO; PK/UNIQUE DDL at migrations/001_core_schema.sql:46-66), which
+    * it never shipped: [[mergeFrames]] over the current generation,
+    * committed as the next one. Because keys are deterministic (uuid5
+    * over natural keys), re-merging the same batch is a no-op — the
+    * pipeline's idempotence invariant, asserted in SinksExtractSpec.
+    *
+    * Shape at 100 TB: one left-anti shuffle join keyed on the merge key.
+    * On a real warehouse, bucket the table by the key so the anti join
+    * co-locates without re-shuffling the big side, or hand the same
+    * staging frame to a MERGE-capable store (Delta/Iceberg/JDBC MERGE);
+    * the rotation keeps one previous generation either way. */
   def mergeParquetOnKey(
       incoming: DataFrame, dir: String, keyCols: Seq[String]): DataFrame = {
     val spark = incoming.sparkSession
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // A death between rotate and rename on a previous call leaves `dir`
-    // missing with the previous generation intact in `dir_backup`;
-    // re-merge into that instead of silently reinitializing from the
-    // incoming batch (which would drop every unmatched existing key).
-    val existing =
-      if (fs.exists(new Path(dir))) Some(spark.read.parquet(dir))
-      else if (fs.exists(new Path(dir + "_backup")))
-        Some(spark.read.parquet(dir + "_backup"))
-      else None
-    val merged =
-      existing.fold(incoming)(mergeFrames(_, incoming, keyCols))
-    // Materialize before rotating: the merged plan reads the directory the
-    // rotation is about to rename.
-    val staged = dir + "_staging"
-    merged.write.mode("overwrite").parquet(staged)
-    rotate(spark, dir)
-    fs.rename(new Path(staged), new Path(dir))
+    commit(Seq(dir -> readGeneration(spark, dir)
+      .fold(incoming)(mergeFrames(_, incoming, keyCols))))
     spark.read.parquet(dir)
   }
 
@@ -136,8 +137,8 @@ object Sinks {
     * load) is proportional to FILE count, not data size. Reads once,
     * `repartitionByRange` on `sortCol` (so per-file min/max stats stay
     * tight — compaction is also the moment layout clustering happens,
-    * cf. [[graft.ops.LayoutOps]]), writes staged, then swaps via the
-    * usual one-generation rotation. Returns the new file count. */
+    * cf. [[graft.ops.LayoutOps]]), then swaps the result in through
+    * [[commit]]. Returns the new file count. */
   def compactParquet(
       spark: SparkSession, dir: String, targetRowsPerFile: Long,
       sortCol: String): Int = {
@@ -145,12 +146,7 @@ object Sinks {
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val nFiles = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
-    val staged = dir + "_staging"
-    df.repartitionByRange(nFiles, col(sortCol))
-      .write.mode("overwrite").parquet(staged)
-    rotate(spark, dir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new Path(staged), new Path(dir))
+    commit(Seq(dir -> df.repartitionByRange(nFiles, col(sortCol))))
     nFiles
   }
 

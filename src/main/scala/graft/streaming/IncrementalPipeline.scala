@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.pipeline.{Sinks, Transform}
 
 /** Structured-Streaming face of the incremental pipeline. The reference's
   * "incremental" mechanics — re-runs over a raw directory, keep-last by
@@ -151,7 +152,7 @@ object IncrementalPipeline {
       .trigger(trigger)
 
   /** Streaming MERGE: every micro-batch upserts into the parquet
-    * warehouse table through [[graft.pipeline.Sinks.mergeParquetOnKey]] —
+    * warehouse table through [[Sinks.mergeParquetOnKey]] —
     * the streaming face of the reference's intended idempotent load.
     * Deterministic keys make replayed batches (checkpoint recovery
     * re-delivery) converge instead of duplicating, which is exactly the
@@ -161,7 +162,7 @@ object IncrementalPipeline {
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.pipeline.Sinks.mergeParquetOnKey(batch, path, keyCols)
+        Sinks.mergeParquetOnKey(batch, path, keyCols)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -187,18 +188,19 @@ object IncrementalPipeline {
     *     `kept` = is-cluster-representative) to the Type-2 SCD dimension
     *     ([[graft.ops.IncrementalOps.scdType2Apply]]);
     *  5. advances all three state artifacts (`dim`, `labels`, `corpus`
-    *     under `statePath`) with [[toScd2Sink]]'s staged-write → rotate
-    *     → rename swap and backup recovery.
+    *     under `statePath`) in one [[Sinks.commit]], each read back
+    *     through [[Sinks.readGeneration]] on the next batch.
     *
-    * Crash-window ordering across the THREE artifacts: outputs are all
-    * staged BEFORE any rename, then renamed dim → labels → corpus. The
-    * corpus is the replay guard, so it must move LAST: a death after
-    * dim/labels advanced but before the corpus rename re-delivers the
-    * batch against the OLD corpus, and re-merging the same delta edges
-    * into already-merged labels is idempotent (contracted endpoints land
-    * on their merged roots) — the replay converges instead of forking
-    * state. Advancing the corpus first would make the replay dedupe to
-    * empty and strand labels/dim a generation behind, forever.
+    * Crash-window ordering across the THREE artifacts: [[Sinks.commit]]
+    * stages all outputs BEFORE any rename, then renames them in the order
+    * given — dim → labels → corpus. The corpus is the replay guard, so
+    * it must move LAST: a death after dim/labels advanced but before the
+    * corpus rename re-delivers the batch against the OLD corpus, and
+    * re-merging the same delta edges into already-merged labels is
+    * idempotent (contracted endpoints land on their merged roots) — the
+    * replay converges instead of forking state. Advancing the corpus
+    * first would make the replay dedupe to empty and strand labels/dim a
+    * generation behind, forever.
     */
   def toIncrementalDedupSink(
       docs: DataFrame, idCol: String, textCol: String,
@@ -208,16 +210,8 @@ object IncrementalPipeline {
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new Path(statePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def load(name: String): Option[DataFrame] = {
-          val p = new Path(s"$statePath/$name")
-          val b = new Path(s"$statePath/${name}_backup")
-          if (fs.exists(p)) Some(spark.read.parquet(p.toString))
-          else if (fs.exists(b)) Some(spark.read.parquet(b.toString))
-          else None
-        }
+        def load(name: String): Option[DataFrame] =
+          Sinks.readGeneration(batch.sparkSession, s"$statePath/$name")
         val corpus0 = load("corpus") // (id, text)
         val labels0 = load("labels") // (id, component)
         val dim0 = load("dim")
@@ -260,17 +254,8 @@ object IncrementalPipeline {
             .withColumn("valid_from", lit(ts))
             .withColumn("valid_to", lit(null).cast("timestamp"))
         }
-        // stage everything while the old generations are still readable,
-        // THEN swap in the documented order: dim -> labels -> corpus
-        val outs = Seq("dim" -> dim, "labels" -> full, "corpus" -> universe)
-        for ((name, df) <- outs)
-          df.write.mode("overwrite").parquet(s"$statePath/${name}_staging")
-        for ((name, _) <- outs) {
-          graft.pipeline.Sinks.rotate(spark, s"$statePath/$name")
-          fs.rename(new Path(s"$statePath/${name}_staging"),
-            new Path(s"$statePath/$name"))
-        }
-        ()
+        Sinks.commit(Seq("dim" -> dim, "labels" -> full, "corpus" -> universe)
+          .map { case (name, df) => s"$statePath/$name" -> df })
       }
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Update)
@@ -280,7 +265,8 @@ object IncrementalPipeline {
     * versioned dimension at `path` through
     * [[graft.ops.IncrementalOps.scdType2Apply]] — the full incremental
     * warehouse loop (change stream in, immutable history out) with the
-    * same staged-write-then-rotate durability as the MERGE sink.
+    * same [[Sinks.commit]] / [[Sinks.readGeneration]] durability as the
+    * MERGE sink.
     *
     * `effectiveTs` maps the batch id to the version timestamp so tests
     * and replays are deterministic; production passes the batch's event-
@@ -302,31 +288,9 @@ object IncrementalPipeline {
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        val updates = ordinalCol.fold(batch) { ord =>
-          val w = Window.partitionBy(keyCols.map(col): _*)
-            .orderBy(col(ord).desc)
-          batch.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn", ord)
-        }
-        val fs = new Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Crash-recovery ordering: the swap below is write staged ->
-        // rotate(path -> path_backup) -> rename(staged -> path). A death
-        // between rotate and rename leaves `path` missing but the full
-        // previous generation in `path_backup`; treating that as "new
-        // dimension" would silently drop ALL closed history and every key
-        // absent from the replayed batch. Recover from the backup instead
-        // — re-applying the replayed batch to it converges (scdType2Apply
-        // is a no-op for unchanged re-deliveries).
-        val base =
-          if (fs.exists(new Path(path))) Some(spark.read.parquet(path))
-          else if (fs.exists(new Path(path + "_backup")))
-            Some(spark.read.parquet(path + "_backup"))
-          else None
-        val dim = base match {
+        val updates = ordinalCol.fold(batch)(ord =>
+          Transform.dedupeKeepLast(batch, keyCols, col(ord)).drop(ord))
+        val dim = Sinks.readGeneration(batch.sparkSession, path) match {
           case Some(existing) =>
             graft.ops.IncrementalOps.scdType2Apply(
               existing, updates, keyCols, compareCols,
@@ -337,13 +301,7 @@ object IncrementalPipeline {
                 lit(effectiveTs(batchId)).as("valid_from"),
                 lit(null).cast("timestamp").as("valid_to")): _*)
         }
-        val staged = path + "_staging"
-        dim.write.mode("overwrite").parquet(staged)
-        // rotate no-ops (and preserves the backup) when `path` is missing,
-        // so a recovery pass keeps its base generation until the rename.
-        graft.pipeline.Sinks.rotate(spark, path)
-        fs.rename(new Path(staged), new Path(path))
-        ()
+        Sinks.commit(Seq(path -> dim))
       }
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Update)

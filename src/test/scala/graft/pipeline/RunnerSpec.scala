@@ -9,7 +9,9 @@ import graft.SparkTestSession
 
 /** End-to-end: full pipeline over the reference's committed raw fixtures,
   * run twice — outputs must match the reference counts and be identical
-  * across re-runs (the pipeline's core incremental invariant). */
+  * across re-runs (the pipeline's core incremental invariant) — and over
+  * three distinct windows into one warehouse, where the dimensions must
+  * accumulate every window seen so far. */
 class RunnerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val rawDir = "/root/reference/data/raw_data"
@@ -54,5 +56,39 @@ class RunnerSpec extends AnyFunSuite {
     // itself the first run's output
     val backup = spark.read.parquet(s"$outDir/repos_clean_backup").collect().toSet
     assert(backup == repos1)
+  }
+
+  test("re-runs over distinct windows accumulate owners and users") {
+    val root = Files.createTempDirectory("graft_rerun")
+    val outDir = root.resolve("out").toString
+    // window w delivers repo w (owner o<w>) and one issue on it by author
+    // a<w> assigned to s<w>; `repos` adds re-deliveries of earlier repos
+    def window(w: Int, repos: Seq[Int]): String = {
+      val dir = Files.createDirectories(root.resolve(s"raw$w"))
+      def write(name: String, rows: Seq[String]): Unit =
+        Files.writeString(dir.resolve(name), rows.mkString("[", ",\n", "]"))
+      write("repos_raw.json", repos.map(r =>
+        s"""{"id": $r, "name": "r$r", "full_name": "o$r/r$r",
+           | "owner": {"id": ${100 + r}, "login": "o$r"}}""".stripMargin))
+      write("branches_raw.json", Seq(s"""{"name": "main", "repo_name": "r$w"}"""))
+      write("issues_raw.json", Seq(
+        s"""{"id": ${1000 + w}, "repo_name": "r$w", "number": $w,
+           | "user": {"id": ${200 + w}, "login": "a$w"},
+           | "assignee": {"id": ${300 + w}, "login": "s$w"}}""".stripMargin))
+      dir.toString
+    }
+    val windows = Seq(window(1, Seq(1)), window(2, Seq(2)), window(3, Seq(3, 1)))
+    def logins(entity: String, c: String): Set[String] =
+      spark.read.parquet(s"$outDir/${entity}_clean").select(c)
+        .collect().map(_.getString(0)).toSet
+
+    for ((raw, i) <- windows.zipWithIndex) {
+      val seen = 1 to i + 1
+      Runner.run(spark, raw, outDir)
+      assert(logins("owners", "owner_login") == seen.map(w => s"o$w").toSet,
+        s"run ${i + 1} owners")
+      assert(logins("users", "user_login") ==
+        seen.flatMap(w => Seq(s"a$w", s"s$w")).toSet, s"run ${i + 1} users")
+    }
   }
 }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,6 +31,24 @@ class SinksExtractSpec extends AnyFunSuite {
     // one generation deep: gen1 is gone, backup is gen2
     assert(spark.read.parquet(base + "_backup")
       .select("v").head().getString(0) == "gen2")
+
+    // a frame that fails at execution time must leave both generations
+    // byte-identical: nothing moves until every output is staged
+    def snapshot(dir: String): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+        .toMap
+      finally walk.close()
+    }
+    val before = (snapshot(base), snapshot(base + "_backup"))
+    intercept[Exception] {
+      Sinks.writeParquetWithRotation(Seq(1L).toDF("id")
+        .withColumn("v", raise_error(lit("boom")).cast("string")), base)
+    }
+    assert((snapshot(base), snapshot(base + "_backup")) == before)
+    assert(spark.read.parquet(base).select("v").head().getString(0) == "gen3")
   }
 
   test("auth probe fail-stop semantics (S4)") {
