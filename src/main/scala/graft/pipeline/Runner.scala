@@ -53,22 +53,26 @@ object Runner {
     }
     // `rowsIn` is by-name: evaluated only after the write action completes,
     // when the input observation (if any) has its value.
-    def sink(entity: String, cleaned: DataFrame, rowsIn: => Long): DataFrame = {
+    def sink(entity: String, cleaned: DataFrame, rowsIn: => Long): Unit = {
       val outObs = Observation(s"${entity}_out")
       Sinks.writeParquetWithRotation(
         cleaned.observe(outObs, count(lit(1)).as("n")),
         s"$outDir/${entity}_clean")
       audits :+= Audit(entity, rowsIn, outObs.get("n").asInstanceOf[Long])
-      spark.read.parquet(s"$outDir/${entity}_clean")
     }
+    // Only entities a later step consumes are read back: each read-back
+    // costs a schema-inference job.
+    def stored(entity: String): DataFrame =
+      spark.read.parquet(s"$outDir/${entity}_clean")
     def rowsOut(entity: String): Long =
       audits.find(_.entity == entity).get.rowsOut
 
     val reposRaw = rawOrNone(spark, s"$rawDir/repos_raw.json", Schemas.reposRaw)
       .getOrElse(sys.error(s"missing $rawDir/repos_raw.json"))
     val (reposRawObs, reposIn) = observedIn("repos", reposRaw)
-    val reposClean = sink("repos", Transform.cleanRepos(reposRawObs),
+    sink("repos", Transform.cleanRepos(reposRawObs),
       reposIn.get("n").asInstanceOf[Long])
+    val reposClean = stored("repos")
 
     sink("owners",
       Transform.cleanOwners(reposClean,
@@ -86,11 +90,11 @@ object Runner {
     rawOrNone(spark, s"$rawDir/issues_raw.json", Schemas.issuesRaw)
       .foreach { iraw =>
         val (irawObs, iIn) = observedIn("issues", iraw)
-        val issuesClean = sink("issues",
+        sink("issues",
           Transform.cleanIssues(irawObs, reposClean),
           iIn.get("n").asInstanceOf[Long])
         sink("users",
-          Transform.cleanUsers(issuesClean,
+          Transform.cleanUsers(stored("issues"),
             Sinks.readGeneration(spark, s"$outDir/users_clean")),
           rowsOut("issues"))
       }

@@ -28,11 +28,29 @@ object Validate {
   def checkViolations(df: DataFrame, predicate: Column): DataFrame =
     df.filter(!coalesce(predicate, lit(false)))
 
-  /** All five warehouse-table rule families in one report, single action
-    * per rule. Timestamp-ordering, enum, non-negative and hex checks are
-    * the DDL's (001_core_schema.sql:104-119,187-190). */
+  /** All five warehouse-table rule families in one report, one Spark action
+    * for every rule: each rule's violation count becomes a one-row
+    * aggregate tagged with its position, and the union of those rows is
+    * collected once. Per-job overhead, not scan work, dominated the
+    * one-count-per-rule audit (19 rules over a 25k-record window on 4
+    * cores: 0.385 s of busy tasks in 2.67 s), so one plan lets AQE submit
+    * every independent scan, shuffle and broadcast stage together. Results
+    * come back in the order of `rules`. Timestamp-ordering, enum,
+    * non-negative and hex checks are the DDL's
+    * (001_core_schema.sql:104-119,187-190). */
   def report(rules: Seq[(String, DataFrame)]): Seq[Violation] =
-    rules.map { case (name, viol) => Violation(name, viol.count()) }
+    if (rules.isEmpty) Nil
+    else {
+      val counts = rules.zipWithIndex
+        .map { case ((_, viol), i) =>
+          viol.agg(count(lit(1)).as("n")).select(lit(i).as("i"), col("n"))
+        }
+        .reduce(_ union _)
+        .collect()
+        .map(r => r.getInt(0) -> r.getLong(1))
+        .toMap
+      rules.zipWithIndex.map { case ((name, _), i) => Violation(name, counts(i)) }
+    }
 
   val ShaHex = "^[0-9a-fA-F]{40}$"
 

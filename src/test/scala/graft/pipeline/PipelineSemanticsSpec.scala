@@ -8,7 +8,8 @@ import graft.SparkTestSession
 /** Issue-path semantics over a synthetic raw fixture (issues_raw.json is
   * missing from the reference snapshot): F3 dropna, D2 keep-last, F6
   * FK-orphan drop, F7 conditional assignee key, E3 labels join, PR
-  * passthrough, plus cleanUsers union/dedupe/accumulate. */
+  * passthrough, plus cleanUsers union/dedupe/accumulate and the Validate
+  * operators and their one-action report. */
 class PipelineSemanticsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -111,5 +112,51 @@ class PipelineSemanticsSpec extends AnyFunSuite {
     assert(Validate.fkOrphans(df, "k", parent, "k2").count() == 2)
     assert(Validate.checkViolations(df, col("k") >= 0).count() == 0)
     assert(Validate.checkViolations(df, col("k") > 1).count() == 2)
+  }
+
+  private def reportRules = {
+    import spark.implicits._
+    val df = Seq((1, "a"), (1, "b"), (2, "c"), (3, "c")).toDF("k", "v")
+    val parent = Seq(2).toDF("k2")
+    val empty = df.filter(lit(false))
+    Seq(
+      "fk_k" -> Validate.fkOrphans(df, "k", parent, "k2"),
+      "pk_k" -> Validate.uniqueViolations(df, Seq("k")),
+      "ck_nonneg" -> Validate.checkViolations(df, col("k") >= 0),
+      "uq_v" -> Validate.uniqueViolations(df, Seq("v")),
+      "pk_k" -> Validate.uniqueViolations(df, Seq("k", "v")),
+      "ck_empty" -> Validate.checkViolations(empty, col("k") > 100),
+      "ck_small" -> Validate.checkViolations(df, col("k") < 3))
+  }
+
+  test("validation report: one violation per rule, in rule order") {
+    val rules = reportRules
+    val expected = rules.map { case (name, viol) =>
+      Validate.Violation(name, viol.count()) }
+    assert(expected.map(_.count) == Seq(3L, 1L, 0L, 1L, 0L, 0L, 1L))
+    assert(Validate.report(rules) == expected)
+    assert(Validate.report(Nil) == Nil)
+  }
+
+  test("validation report runs every rule in one action") {
+    val rules = reportRules
+    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, error: Exception): Unit =
+        failures.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Validate.report(rules)
+      Thread.sleep(2000) // listener bus is async; let the events drain
+    } finally spark.listenerManager.unregister(listener)
+    assert(failures.get() == 0)
+    assert(actions.get() == 1,
+      s"report over ${rules.size} rules ran ${actions.get()} actions")
   }
 }
