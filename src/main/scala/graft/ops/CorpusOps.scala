@@ -879,7 +879,7 @@ object CorpusOps {
     * At 100 TB this is the per-snapshot feature table a DSIR deployment
     * would persist next to the corpus. */
   private[ops] val dsirFeatureCache =
-    new BoundedDfCache[(DataFrame, String, String, Int)](maxEntries = 8)
+    Memo.staging[(DataFrame, String, String, Int), DataFrame](8)
 
   def sharedDsirFeatures(
       df: DataFrame, idCol: String, textCol: String,

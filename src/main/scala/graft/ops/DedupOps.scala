@@ -65,11 +65,11 @@ object DedupOps {
     * single-session analog is one persisted frame memoized per
     * (source, idCol, textCol, k). Keyed by DataFrame identity — [[graft.T]]
     * memoizes relations, so the same table is the same instance per
-    * session. LRU-bounded with unpersist-on-evict ([[BoundedDfCache]]) so
-    * a session churning many corpora / k values cannot pin executor
+    * session. LRU-bounded with unpersist-on-evict ([[Memo]]) so a
+    * session churning many corpora / k values cannot pin executor
     * storage without limit. */
   private[ops] val shingleCache =
-    new BoundedDfCache[(DataFrame, String, String, Int)](maxEntries = 8)
+    Memo.staging[(DataFrame, String, String, Int), DataFrame](8)
 
   def sharedShingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     shingleCache.getOrElseUpdate((df, idCol, textCol, k)) {
@@ -94,7 +94,7 @@ object DedupOps {
     * sides — the combined-side census [[ngramJaccardPairsBetween]]
     * specifies equals the whole-corpus census.) */
   private[ops] val cappedShingleCache =
-    new BoundedDfCache[(DataFrame, String, String, Int, Int)](maxEntries = 8)
+    Memo.staging[(DataFrame, String, String, Int, Int), DataFrame](8)
 
   def sharedCappedShingles(
       df: DataFrame, idCol: String, textCol: String,
@@ -115,7 +115,7 @@ object DedupOps {
     * which keys on this frame's identity). Cache owns the persisted
     * frames; [[clearPairCache]] releases them. */
   private[ops] val pairCache =
-    new BoundedDfCache[(DataFrame, String, String, Int, Double)](maxEntries = 8)
+    Memo.staging[(DataFrame, String, String, Int, Double), DataFrame](8)
 
   def sharedNgramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,

@@ -615,14 +615,10 @@ object GraphOps {
     * identity: pass a stable frame (e.g.
     * [[DedupOps.sharedNgramJaccardPairs]]) or the cache cannot hit. The
     * cache owns the persisted frames — LRU-bounded with unpersist-on-evict
-    * ([[BoundedDfCache]]); [[clearComponentCache]] releases everything.
+    * ([[Memo]]); [[clearComponentCache]] releases everything.
     */
   private[ops] val componentCache =
-    // racingPlansIdentical = false: component frames sit on run-unique
-    // localCheckpoint RDDs, so two racing builds have DISTINCT logical
-    // plans and the race loser must be unpersisted or its blocks leak.
-    new BoundedDfCache[(DataFrame, String, String)](
-      maxEntries = 8, racingPlansIdentical = false)
+    Memo.staging[(DataFrame, String, String), DataFrame](8)
 
   def sharedComponents(edges: DataFrame, aCol: String, bCol: String): DataFrame =
     componentCache.getOrElseUpdate((edges, aCol, bCol)) {

@@ -61,7 +61,7 @@ object LinkageOps {
     * rendering — two call sites blocking the same frame differently get
     * distinct entries without remembering to pass a `variant`. */
   private[ops] val pairCache =
-    new BoundedDfCache[(DataFrame, String, String, String)](maxEntries = 8)
+    Memo.staging[(DataFrame, String, String, String), DataFrame](8)
 
   def sharedBlockedFuzzyPairs(
       df: DataFrame, idCol: String, nameCol: String,

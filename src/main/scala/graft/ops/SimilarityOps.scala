@@ -746,7 +746,7 @@ object SimilarityOps {
     * persisted frame per (corpus, column, scale) — the model-statistics
     * staging shape every shared frame here follows. */
   private[ops] val covCache =
-    new BoundedDfCache[(DataFrame, String, String, Double)](maxEntries = 4)
+    Memo.staging[(DataFrame, String, String, Double), DataFrame](4)
 
   def sharedEmbeddingCovariance(
       df: DataFrame, idCol: String, vecCol: String,

@@ -17,22 +17,21 @@ object AnalyticsQueries {
     * (session, corpus) — the sharing set for the lift and rules gates:
     * both ran the IDENTICAL per-order distinct → a<b pair self-join →
     * ≥2-support rollup → two item-count joins; only the final scoring
-    * projection differs. Same operator-OUTPUT memo discipline as
-    * [[TextQueries.sharedCooccPairs]]: [[GraphQueries.clearSweepMemos]]
-    * drops it between bench passes, so best-of-3 repeats measure the
+    * projection differs. A sweep memo ([[graft.ops.Memo.sweep]]):
+    * dropped between bench passes, so best-of-3 repeats measure the
     * build (charged to whichever gate runs first).
     *
     * @return (pinned `(a, b, c_ab, c_a, c_b)` pair frame,
     *         pinned 1-row basket count `n`). */
-  private val basketCache = new java.util.concurrent.ConcurrentHashMap[
+  private val basketCache = graft.ops.Memo.sweep[
     (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](4)
   private[queries] def sharedBasketPairs(
       s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame,
                    org.apache.spark.sql.DataFrame) =
-    basketCache.computeIfAbsent((s, d), { case (s2, d2) =>
-      val li = T(s2, d2, "lineitem")
+    basketCache.getOrElseUpdate((s, d)) {
+      val li = T(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
         .distinct()
       val nOrders = li.select("ok").distinct().agg(count(lit(1)).as("n"))
@@ -45,8 +44,7 @@ object AnalyticsQueries {
         .join(item.select(col("p").as("a"), col("c").as("c_a")), "a")
         .join(item.select(col("p").as("b"), col("c").as("c_b")), "b")
       (graft.ops.Staging.pin(pair), graft.ops.Staging.pin(nOrders))
-    })
-  private[queries] def clearBasketCache(): Unit = basketCache.clear()
+    }
 
   val all: Seq[Q] = Seq(
     // Full ranking/navigation window battery over one shuffle: every

@@ -27,31 +27,39 @@ object BehaviorQueries {
     * behavior_markov_transitions, behavior_markov_stationary): each ran
     * the IDENTICAL (ts, event_id)-ordered per-user lag window and
     * (src, dst) count rollup; only the normalization downstream differs.
-    * Same operator-OUTPUT memo discipline as
-    * [[TextQueries.sharedCooccPairs]]: [[GraphQueries.clearSweepMemos]]
-    * drops it between bench passes, so best-of-3 repeats measure the
-    * window pass (charged to whichever gate runs first).
+    * A sweep memo ([[graft.ops.Memo.sweep]]): dropped between bench
+    * passes, so best-of-3 repeats measure the window pass (charged to
+    * whichever gate runs first).
     *
-    * @return pinned (`src_state`, `dst_state`, `cnt`) — the exact
-    *         integer transition-count matrix (domain² rows). */
-  private val eventPairCache = new java.util.concurrent.ConcurrentHashMap[
+    * @return pinned [[eventPairRollup]]. */
+  private val eventPairCache = graft.ops.Memo.sweep[
     (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
+    org.apache.spark.sql.DataFrame](4)
   private[queries] def sharedEventPairs(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    eventPairCache.computeIfAbsent((s, d), { case (s2, d2) =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      graft.ops.Staging.pin(
-        T(s2, d2, "events")
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"))
-          .withColumn("src_state", lag("event_type", 1).over(w))
-          .filter(col("src_state").isNotNull)
-          .groupBy(col("src_state"), col("event_type").as("dst_state"))
-          .agg(count(lit(1)).as("cnt")))
-    })
-  private[queries] def clearEventPairCache(): Unit = eventPairCache.clear()
+    eventPairCache.getOrElseUpdate((s, d)) {
+      graft.ops.Staging.pin(eventPairRollup(s, d))
+    }
+
+  /** The un-pinned consecutive-event-pair rollup behind
+    * [[sharedEventPairs]]: one (ts, event_id)-ordered per-user lag window
+    * over ONE `user_id` exchange, then the (src, dst) count.
+    *
+    * @return (`src_state`, `dst_state`, `cnt`) — the exact integer
+    *         transition-count matrix (domain² rows). */
+  private[graft] def eventPairRollup(
+      s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    T(s, d, "events")
+      .select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"))
+      .withColumn("src_state", lag("event_type", 1).over(w))
+      .filter(col("src_state").isNotNull)
+      .groupBy(col("src_state"), col("event_type").as("dst_state"))
+      .agg(count(lit(1)).as("cnt"))
+  }
 
   val all: Seq[Q] = Seq(
 

@@ -22,7 +22,7 @@ object EvalQueries {
     * shared frame. The join is a plain doc_id equi-join (broadcastable
     * at these SFs; key-shuffled at 100 TB). */
   private val scoredCache =
-    new graft.ops.BoundedDfCache[(SparkSession, String)](maxEntries = 8)
+    graft.ops.Memo.staging[(SparkSession, String), DataFrame](8)
 
   private def scored(s: SparkSession, d: String): DataFrame =
     scoredCache.getOrElseUpdate((s, d)) {
@@ -60,7 +60,7 @@ object EvalQueries {
     * (% 16 == 0). The users × catalog slate is a |catalog|-row
     * broadcast cross (declared). */
   private val rankCache =
-    new graft.ops.BoundedDfCache[(SparkSession, String)](maxEntries = 8)
+    graft.ops.Memo.staging[(SparkSession, String), DataFrame](8)
 
   private def rankPerUser(s: SparkSession, d: String): DataFrame =
     rankCache.getOrElseUpdate((s, d)) {

@@ -43,39 +43,33 @@ object TextQueries {
     * induces its own over the KEPT corpus (a different training set by
     * design). Induction itself stays independently gated by
     * text_bpe_merges. */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]()
+  private val mergeCache = graft.ops.Memo.staging[
+    (org.apache.spark.sql.SparkSession, String), Seq[(String, String)]](4)
   private[queries] def sharedMerges(
       s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, String)] =
-    mergeCache.computeIfAbsent((s, d), { case (s, d) =>
+    mergeCache.getOrElseUpdate((s, d)) {
       TextOps.bpeMergesLog(T(s, d, "documents"), "text", steps = 5)
         .map { case (_, pair, merged, _) => (pair, merged) }
-    })
-
-  /** Drop every cached merge table (test hygiene / corpus regeneration
-    * in-session — the [[graft.ops.LinkageOps.clearPairCache]] pattern;
-    * entries also retain their stopped sessions otherwise). */
-  private[queries] def clearMergeCache(): Unit = mergeCache.clear()
+    }
 
   /** One co-occurrence pair table per (session, corpus) — the sharing
     * set for the counts/PMI/TextRank gate trio (same corpus, same
     * vocabK = 50 tokenizer): one corpus tokenize + vocab cap + pair
     * self-join instead of three ([[graft.queries.GraphQueries]]'
-    * landmark-sweep discipline). This is an operator-OUTPUT memo:
-    * [[GraphQueries.clearSweepMemos]] drops it between bench passes so
+    * landmark-sweep discipline). A sweep memo
+    * ([[graft.ops.Memo.sweep]]): dropped between bench passes so
     * best-of-3 repeats measure the build, not a pinned-frame read. */
-  private val cooccCache = new java.util.concurrent.ConcurrentHashMap[
+  private val cooccCache = graft.ops.Memo.sweep[
     (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
+    org.apache.spark.sql.DataFrame](4)
   private[queries] def sharedCooccPairs(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    cooccCache.computeIfAbsent((s, d), { case (s2, d2) =>
+    cooccCache.getOrElseUpdate((s, d)) {
       graft.ops.Staging.pin(
-        TextOps.cooccurrencePairs(T(s2, d2, "documents"), "doc_id", "text",
+        TextOps.cooccurrencePairs(T(s, d, "documents"), "doc_id", "text",
           vocabK = 50))
-    })
-  private[queries] def clearCooccCache(): Unit = cooccCache.clear()
+    }
 
   /** The TF-IDF cosine oracle (doc_id%5 sample, cap 450, floor 0.8) —
     * shared verbatim by the full-scan and prefix-filtered gates: the

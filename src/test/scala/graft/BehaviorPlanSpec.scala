@@ -32,8 +32,12 @@ class BehaviorPlanSpec extends AnyFunSuite {
   }
 
   test("transitions: one ordered user window feeds the 25-row rollup") {
+    val rollup = queries.BehaviorQueries.eventPairRollup(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(countOf(rollup, "Exchange hashpartitioning\\(user_id") == 1, rollup)
+    // the gate reads the memo's pinned rollup: no user shuffle of its own
     val p = plan("event_transitions")
-    assert(countOf(p, "Exchange hashpartitioning\\(user_id") == 1, p)
+    assert(countOf(p, "Exchange hashpartitioning\\(user_id") == 0, p)
   }
 
   test("twap: lead window and rollup share ONE user_id exchange") {
