@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * Why: no two libms agree on the last ulp. On this machine glibc's
   * `log` (DuckDB's), HotSpot's `Math.log` intrinsic, and fdlibm's
   * `StrictMath.log` disagree pairwise on ~0.1-7% of random rational
-  * inputs (measured, `tools/LogProbe`), and none is correctly rounded —
+  * inputs (measured, PERF.md round-10 record), and none is correctly rounded —
   * so ANY oracle gate whose doubles pass through a native log is
   * betting on per-dataset luck. This expression removes the bet: both
   * sides compute

@@ -733,18 +733,8 @@ object DedupOps {
       st.rowCount.map(_ * 64L).getOrElse(BigInt(0L))
         .max(st.sizeInBytes) * multiplier
     val want = streamBytes / advisory
-    val chosen =
-      if (want >= 16384) 16384
-      else math.max(session, want.toInt)
-    // diagnostic breadcrumb for scale sweeps (off unless opted in):
-    // the chosen width is invisible in explain() output once AQE
-    // coalesces, and a mis-estimated Catalyst size is the first thing
-    // to rule out when a sweep tier bends
-    if (sys.env.contains("SPARK_GRAFT_LOG_PARTS"))
-      System.err.println(
-        s"[bytesScaledParts] est=${streamBytes / multiplier} x$multiplier" +
-          s" advisory=$advisory want=$want chosen=$chosen")
-    chosen
+    if (want >= 16384) 16384
+    else math.max(session, want.toInt)
   }
 
   /** Cross-document repeated-substring detection (the exact-substring

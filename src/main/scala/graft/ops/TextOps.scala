@@ -25,8 +25,6 @@ object TextOps {
   def tokensBpeIsh(text: Column): Column =
     array_remove(split(lower(text), "[^a-z0-9]+"), "")
 
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** Quality signals: all exact-integer ratios so results reproduce
     * bit-identically in any engine (counts divided as doubles). */
   def qualityScore(df: DataFrame, textCol: String): DataFrame = {

@@ -46,9 +46,9 @@ object Sinks {
     * and rename each one in the order given. All frames are materialized
     * before any generation moves, so callers order the swaps for their
     * own crash windows (see the incremental-dedup sink). */
-  def commit(outputs: Seq[(String, DataFrame)], format: String = "parquet"): Unit = {
+  def commit(outputs: Seq[(String, DataFrame)]): Unit = {
     for ((dir, df) <- outputs)
-      df.write.mode("overwrite").format(format).save(dir + "_staging")
+      df.write.mode("overwrite").parquet(dir + "_staging")
     for ((dir, df) <- outputs) {
       val fs = fileSystem(df.sparkSession, dir)
       rotate(fs, dir)
@@ -59,13 +59,6 @@ object Sinks {
   /** Parquet is the engine-native clean-layer format. */
   def writeParquetWithRotation(df: DataFrame, dir: String): Unit =
     commit(Seq(dir -> df))
-
-  /** ORC with the same generation contract — for warehouses standardized
-    * on ORC (Hive-lineage stacks) rather than parquet; Spark's reader
-    * gives ORC the same pushdown/pruning treatment, asserted in
-    * SinksExtractSpec. */
-  def writeOrcWithRotation(df: DataFrame, dir: String): Unit =
-    commit(Seq(dir -> df), "orc")
 
   /** The MERGE plan itself, storage-free: incoming rows replace same-key
     * existing rows, new keys append, unmatched existing keys survive.
@@ -101,18 +94,6 @@ object Sinks {
       .fold(incoming)(mergeFrames(_, incoming, keyCols))))
     spark.read.parquet(dir)
   }
-
-  /** Hive-style partitioned parquet layout: one directory per value of
-    * the partition columns. Low-cardinality filter columns (event type,
-    * ingest date, language) become partition pruning at read time — the
-    * scan never opens non-matching directories, which at 100 TB turns
-    * "scan everything, filter later" into "list three directories".
-    * Pruning is asserted in SinksExtractSpec (PartitionFilters reach the
-    * scan node). Pair with [[writeBucketedTable]]: partition by the
-    * coarse filter axis, bucket by the join key. */
-  def writePartitioned(
-      df: DataFrame, dir: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
 
   /** Bucketed warehouse table: pre-shuffles rows into `buckets` files per
     * partition keyed by `key` (sorted within buckets), so every later join

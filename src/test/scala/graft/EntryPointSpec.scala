@@ -1,0 +1,38 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The program has four entry points — Verify, Bench, the pipeline Runner
+  * and the per-gate profiler — and only they read the environment. A
+  * one-off diagnostic main or an env knob elsewhere is code no caller
+  * keeps alive; this spec keeps new ones from creeping back in. */
+class EntryPointSpec extends AnyFunSuite {
+
+  private val entryPoints = Set(
+    "Bench.scala", "Verify.scala", "pipeline/Runner.scala",
+    "tools/ProfileOne.scala")
+
+  private val root = java.nio.file.Paths.get("src/main/scala/graft")
+
+  private def filesWith(token: String): Set[String] = {
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    files
+      .filter(f => java.nio.file.Files.readString(f).contains(token))
+      .map(f => root.relativize(f).toString.replace('\\', '/')).toSet
+  }
+
+  test("only the four entry points define a main") {
+    assert(filesWith("def main(") == entryPoints)
+  }
+
+  test("only the four entry points read sys.env") {
+    assert(filesWith("sys.env") == entryPoints)
+  }
+}

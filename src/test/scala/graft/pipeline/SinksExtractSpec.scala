@@ -244,20 +244,6 @@ class SinksExtractSpec extends AnyFunSuite {
       "re-applying the same batch must be a no-op")
   }
 
-  test("partitioned layout prunes non-matching partitions at the scan") {
-    val tmp = Files.createTempDirectory("graft_part").toString + "/events"
-    val ev = graft.T(spark, "/root/testdata/sf0.001", "events")
-    Sinks.writePartitioned(ev, tmp, Seq("event_type"))
-
-    val read = spark.read.parquet(tmp).filter(col("event_type") === "click")
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("event_type"),
-      s"partition filter must reach the scan:\n$plan")
-    assert(read.count() ==
-      ev.filter(col("event_type") === "click").count())
-  }
-
   test("JDBC sink round-trips via embedded Derby, drops lineage, idempotent (S8)") {
     import spark.implicits._
     val url = "jdbc:derby:memory:graftdb;create=true"
@@ -347,29 +333,6 @@ class SinksExtractSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS w_orders")
       spark.sql("DROP TABLE IF EXISTS w_customer")
     }
-  }
-
-  test("ORC sink round-trips with rotation and gets scan-level pushdown") {
-    val sf = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_orc").toString + "/t"
-    val src = graft.T(spark, sf, "orders")
-      .select("o_orderkey", "o_custkey", "o_orderstatus")
-    Sinks.writeOrcWithRotation(src, tmp)
-    val back = spark.read.orc(tmp)
-    assert(back.schema == src.schema, "ORC must preserve the schema")
-    assert(back.count() == src.count())
-    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty,
-      "ORC round trip must preserve every row")
-    // same rotation contract as parquet: second write keeps a backup gen
-    Sinks.writeOrcWithRotation(src.limit(10), tmp)
-    assert(spark.read.orc(tmp).count() == 10)
-    assert(spark.read.orc(tmp + "_backup").count() == src.count(),
-      "previous generation must survive as the backup")
-    // ORC scans get the same filter pushdown treatment as parquet
-    val plan = spark.read.orc(tmp)
-      .filter(col("o_orderstatus") === "F").queryExecution.executedPlan
-    assert(plan.toString.contains("PushedFilters: [IsNotNull(o_orderstatus), EqualTo(o_orderstatus,F)]"),
-      s"ORC scan must push the filter:\n$plan")
   }
 
   test("executor-side fan-out plans one scan node, not an N-branch union") {
