@@ -5,12 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** File sinks with the reference's one-generation backup rotation
   * (extract.py:23-34, transform.py:41-55). Every file write goes through
-  * one protocol, [[commit]]: stage each output to `<dir>_staging`, then
-  * per output rotate (delete `<dir>_backup`, rename `<dir>` to it) and
-  * rename the staged directory to `<dir>`. Staging first means a frame
-  * may read the generation it replaces, and a failed write leaves both
-  * generations untouched. Reads go through [[readGeneration]], which
-  * recovers from the one crash window the swap has. Spark writes
+  * one protocol in two steps: [[stage]] writes an output to
+  * `<dir>_staging` and returns the staged frame, and [[swap]] then per
+  * output rotates (delete `<dir>_backup`, rename `<dir>` to it) and
+  * renames the staged directory to `<dir>`. [[commit]] is the two in a
+  * row; `Runner` stages a whole warehouse, deriving later tables from the
+  * staged frames, before one swap. Staging first means a frame may read
+  * the generation it replaces, and a failed write leaves every generation
+  * untouched. Reads go through [[readGeneration]], which recovers from
+  * the crash window a table's own rotate-then-rename has. Spark writes
   * directories, not files, so the swap uses Hadoop FileSystem renames —
   * atomic on HDFS-like stores, and exactly the generation semantics the
   * reference gets from os.rename. */
@@ -33,7 +36,7 @@ object Sinks {
   }
 
   /** The current parquet generation of `dir`. A death between rotate and
-    * rename in [[commit]] leaves `dir` missing with the previous
+    * rename in [[swap]] leaves `dir` missing with the previous
     * generation intact in `dir_backup`; that one is returned then, so a
     * re-run builds on it instead of silently reinitializing (which would
     * drop every accumulated key). None when neither exists. */
@@ -42,17 +45,32 @@ object Sinks {
       .find(d => fileSystem(spark, d).exists(new Path(d)))
       .map(spark.read.parquet(_))
 
-  /** Write every `(dir, frame)` output to `<dir>_staging`, then rotate
-    * and rename each one in the order given. All frames are materialized
-    * before any generation moves, so callers order the swaps for their
-    * own crash windows (see the incremental-dedup sink). */
-  def commit(outputs: Seq[(String, DataFrame)]): Unit = {
-    for ((dir, df) <- outputs)
-      df.write.mode("overwrite").parquet(dir + "_staging")
-    for ((dir, df) <- outputs) {
-      val fs = fileSystem(df.sparkSession, dir)
+  /** Write `df` to `<dir>_staging` and return the staged rows, read with
+    * `df`'s own schema so the read starts no schema-inference job. The
+    * frame reads the staging directory, so use it before [[swap]] moves
+    * that directory to `dir`. */
+  def stage(dir: String, df: DataFrame): DataFrame = {
+    df.write.mode("overwrite").parquet(dir + "_staging")
+    df.sparkSession.read.schema(df.schema).parquet(dir + "_staging")
+  }
+
+  /** Make each staged `dir` current, in the order given: rotate `dir` to
+    * `<dir>_backup`, then rename `<dir>_staging` to `dir`. Callers stage
+    * every output first, so nothing moves unless every write succeeded,
+    * and order the swaps for their own crash windows (see the
+    * incremental-dedup sink). */
+  def swap(spark: SparkSession, dirs: Seq[String]): Unit =
+    for (dir <- dirs) {
+      val fs = fileSystem(spark, dir)
       rotate(fs, dir)
       rename(fs, new Path(dir + "_staging"), new Path(dir))
+    }
+
+  /** [[stage]] every `(dir, frame)` output, then [[swap]] them all. */
+  def commit(outputs: Seq[(String, DataFrame)]): Unit = {
+    for ((dir, df) <- outputs) stage(dir, df)
+    outputs.headOption.foreach { case (_, df) =>
+      swap(df.sparkSession, outputs.map(_._1))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Constraint operators replacing the warehouse DDL's enforcement
@@ -51,6 +51,49 @@ object Validate {
         .toMap
       rules.zipWithIndex.map { case ((name, _), i) => Violation(name, counts(i)) }
     }
+
+  /** The warehouse DDL's 19 PK / UNIQUE / FK / CHECK rules
+    * (001_core_schema.sql:46-190) over the five clean tables under `dir`
+    * (`<dir>/<entity>_clean`), counted by one [[report]] in a fixed
+    * order. NULL passes the timestamp-order and commit-sha checks; every
+    * other CHECK counts a NULL as a violation. */
+  def warehouse(spark: SparkSession, dir: String): Seq[Violation] = {
+    def clean(entity: String) = spark.read.parquet(s"$dir/${entity}_clean")
+    val repos = clean("repos")
+    val owners = clean("owners")
+    val users = clean("users")
+    val issues = clean("issues")
+    val branches = clean("branches")
+    def orNull(c: String, pred: Column) = col(c).isNull || pred
+    report(Seq(
+      "pk_repos" -> uniqueViolations(repos, Seq("repo_id")),
+      "pk_owners" -> uniqueViolations(owners, Seq("owner_id")),
+      "pk_users" -> uniqueViolations(users, Seq("user_id")),
+      "pk_issues" -> uniqueViolations(issues, Seq("issue_id")),
+      "pk_branches" -> uniqueViolations(branches, Seq("branch_id")),
+      "uq_owner_login" -> uniqueViolations(owners, Seq("owner_login")),
+      "uq_user_login" -> uniqueViolations(users, Seq("user_login")),
+      "uq_repo_full_name" -> uniqueViolations(repos, Seq("full_name")),
+      "uq_branch_name" -> uniqueViolations(branches, Seq("repo_id", "branch_name")),
+      "fk_repo_owner" -> fkOrphans(repos, "owner_id", owners, "owner_id"),
+      "fk_issue_author" -> fkOrphans(issues, "author_id", users, "user_id"),
+      "fk_issue_assignee" -> fkOrphans(
+        issues.filter(col("assignee_id").isNotNull), "assignee_id", users, "user_id"),
+      "fk_issue_repo" -> fkOrphans(issues, "repo_id", repos, "repo_id"),
+      "fk_branch_repo" -> fkOrphans(branches, "repo_id", repos, "repo_id"),
+      "ck_visibility" -> checkViolations(repos, visibilityValid(col("visibility"))),
+      "ck_nonneg_counts" -> checkViolations(repos,
+        col("stargazers_count") >= 0 && col("watchers_count") >= 0 &&
+          col("forks_count") >= 0 && col("open_issues_count") >= 0),
+      "ck_repo_ts_order" -> checkViolations(repos,
+        orNull("updated_at", col("updated_at") >= col("created_at")) &&
+          orNull("pushed_at", col("pushed_at") >= col("created_at"))),
+      "ck_issue_ts_order" -> checkViolations(issues,
+        orNull("updated_at", col("updated_at") >= col("created_at")) &&
+          orNull("closed_at", col("closed_at") >= col("created_at"))),
+      "ck_commit_sha_hex" -> checkViolations(branches,
+        orNull("commit_sha", isHexSha(col("commit_sha"))))))
+  }
 
   val ShaHex = "^[0-9a-fA-F]{40}$"
 
