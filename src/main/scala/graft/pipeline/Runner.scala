@@ -7,6 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.expr.ReferenceConstant
 
 /** End-to-end pipeline orchestration: the reference's module-level run
   * (transform.py:492-497) as one idempotent function, planned along its
@@ -28,7 +31,12 @@ import org.apache.spark.sql.functions._
   * moves before the swap, so that is still the previous window's
   * generation. Each entity reports before/after row counts (the A1/A3
   * audits), returned in the fixed order repos, owners, branches, issues,
-  * users whatever order the stages finished in. */
+  * users whatever order the stages finished in.
+  *
+  * `ingestedAt` is resolved once per run on the driver and reaches the
+  * branches write by reference ([[graft.expr.ReferenceConstant]]), not
+  * as an inlined literal, so a run over a window shaped like an earlier
+  * one reuses that run's generated code and compiles nothing. */
 object Runner {
 
   final case class Audit(entity: String, rowsIn: Long, rowsOut: Long)
@@ -38,7 +46,7 @@ object Runner {
   private val Dimensions = Set("owners", "users")
 
   private def rawOrNone(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+      schema: StructType): Option[DataFrame] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -59,7 +67,9 @@ object Runner {
   }
 
   /** Run the full clean layer over a raw directory. Returns audits in
-    * entity order. */
+    * entity order. `ingestedAt` stamps every branch row; a column that
+    * folds to one value (the default, a cast literal) is fixed when the
+    * run starts. */
   def run(
       spark: SparkSession,
       rawDir: String,
@@ -97,16 +107,19 @@ object Runner {
 
     val branchesRaw = rawOrNone(spark, s"$rawDir/branches_raw.json", Schemas.branchesRaw)
     val issuesRaw = rawOrNone(spark, s"$rawDir/issues_raw.json", Schemas.issuesRaw)
+    val ingested = ReferenceConstant.of(spark, ingestedAt)
+    def generation(entity: String, schema: StructType) =
+      Sinks.readGeneration(spark, dir(entity), Some(schema))
     val dependents = concurrently(Seq(
       () => Seq(stage("owners",
-        Transform.cleanOwners(repos, Sinks.readGeneration(spark, dir("owners"))),
+        Transform.cleanOwners(repos, generation("owners", Schemas.ownersClean)),
         reposAudit.rowsOut)._2),
       () => branchesRaw.toSeq.map(b =>
-        stageRaw("branches", b)(Transform.cleanBranches(_, repos, ingestedAt))._2),
+        stageRaw("branches", b)(Transform.cleanBranches(_, repos, ingested))._2),
       () => issuesRaw.toSeq.flatMap { i =>
         val (issues, issuesAudit) = stageRaw("issues", i)(Transform.cleanIssues(_, repos))
         Seq(issuesAudit, stage("users",
-          Transform.cleanUsers(issues, Sinks.readGeneration(spark, dir("users"))),
+          Transform.cleanUsers(issues, generation("users", Schemas.usersClean)),
           issuesAudit.rowsOut)._2)
       })).flatten
 

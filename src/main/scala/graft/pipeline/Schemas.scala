@@ -86,4 +86,15 @@ object Schemas {
   val branchesCleanCols: Seq[String] = Seq(
     "branch_id", "branch_name", "protected", "commit_sha", "repo_id",
     "ingested_at")
+
+  /** The accumulated dimensions as stored (transform.py:442-451,
+    * 466-489): uuid5 key and login, both strings. Reading a stored
+    * generation with these starts no schema-inference job. */
+  val ownersClean: StructType = StructType(Seq(
+    StructField("owner_id", StringType),
+    StructField("owner_login", StringType)))
+
+  val usersClean: StructType = StructType(Seq(
+    StructField("user_id", StringType),
+    StructField("user_login", StringType)))
 }

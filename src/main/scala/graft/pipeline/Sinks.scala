@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** File sinks with the reference's one-generation backup rotation
   * (extract.py:23-34, transform.py:41-55). Every file write goes through
@@ -39,11 +40,14 @@ object Sinks {
     * rename in [[swap]] leaves `dir` missing with the previous
     * generation intact in `dir_backup`; that one is returned then, so a
     * re-run builds on it instead of silently reinitializing (which would
-    * drop every accumulated key). None when neither exists. */
-  def readGeneration(spark: SparkSession, dir: String): Option[DataFrame] =
+    * drop every accumulated key). None when neither exists. A caller
+    * that knows the table's `schema` passes it, so the read starts no
+    * schema-inference job. */
+  def readGeneration(spark: SparkSession, dir: String,
+      schema: Option[StructType] = None): Option[DataFrame] =
     Seq(dir, dir + "_backup")
       .find(d => fileSystem(spark, d).exists(new Path(d)))
-      .map(spark.read.parquet(_))
+      .map(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(_))
 
   /** Write `df` to `<dir>_staging` and return the staged rows, read with
     * `df`'s own schema so the read starts no schema-inference job. The
@@ -108,7 +112,7 @@ object Sinks {
   def mergeParquetOnKey(
       incoming: DataFrame, dir: String, keyCols: Seq[String]): DataFrame = {
     val spark = incoming.sparkSession
-    commit(Seq(dir -> readGeneration(spark, dir)
+    commit(Seq(dir -> readGeneration(spark, dir, Some(incoming.schema))
       .fold(incoming)(mergeFrames(_, incoming, keyCols))))
     spark.read.parquet(dir)
   }

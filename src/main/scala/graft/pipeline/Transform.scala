@@ -134,7 +134,11 @@ object Transform {
   /** transform.py:350-414 — branches: dropna, keep-last on the composite
     * natural key, uuid5 branch key, FK-resolving left join to repos
     * (dimension side broadcast when small), bool encode, injectable
-    * ingestion timestamp for deterministic testing (E7). */
+    * ingestion timestamp for deterministic testing (E7). A foldable
+    * `ingestedAt` is inlined into the generated code as a literal, so
+    * each new value compiles the write stage anew; `Runner` passes its
+    * per-run value by reference ([[graft.expr.ReferenceConstant]]) so
+    * every run reuses one compiled stage. */
   def cleanBranches(
       raw: DataFrame,
       reposClean: DataFrame,

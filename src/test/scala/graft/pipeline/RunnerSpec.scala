@@ -187,11 +187,44 @@ class RunnerSpec extends AnyFunSuite {
       s"job tags in start order: $tags")
     val byRun = sites.asScala.toSeq.groupMap(_._1)(_._2)
     def parquetReads(run: String) = byRun(run).filter(_.startsWith("parquet at"))
-    // the fresh warehouse infers no schema at all; the second run infers
-    // only the two dimension generations it builds on (readGeneration)
+    // no run infers a schema: the fresh warehouse reads only staged
+    // frames, and the second run also the two dimension generations it
+    // builds on, all with known schemas
     assert(parquetReads("run0").isEmpty, parquetReads("run0"))
-    assert(parquetReads("run1").size == 2 &&
-      parquetReads("run1").forall(_.startsWith("parquet at Sinks")), parquetReads("run1"))
+    assert(parquetReads("run1").isEmpty, parquetReads("run1"))
+  }
+
+  test("a warm run generates the code of the run before") {
+    // Spark caches compiled classes by their generated source, so a run
+    // whose whole-stage code equals the previous run's compiles nothing.
+    // The source is compared rather than CodegenMetrics' compile count,
+    // which also depends on what earlier suites left in the session's
+    // 100-class codegen cache.
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val stages = new AdaptiveSparkPlanHelper {}
+    val codes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        stages.collect(qe.executedPlan) { case w: WholeStageCodegenExec => w }
+          .foreach(w => codes.add(w.doCodeGen()._2.body))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, error: Exception): Unit = ()
+    }
+    val root = Files.createTempDirectory("graft_codegen")
+    val raw = window(root, 1, Seq(1))
+    spark.listenerManager.register(listener)
+    val runs = try (1 to 3).map { i =>
+      codes.clear()
+      Runner.run(spark, raw, root.resolve(s"out$i").toString)
+      Thread.sleep(2000) // listener bus is async; let the events drain
+      codes.asScala.toSeq.sorted
+    } finally spark.listenerManager.unregister(listener)
+    val changed = runs(2).diff(runs(1)).size
+    assert(runs(2).nonEmpty)
+    assert(changed == 0 && runs(2).size == runs(1).size,
+      s"$changed of ${runs(2).size} stages changed between runs")
   }
 
   test("the CLI's audit line gives drops for facts only") {
