@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Interval algebra over keyed event streams — the gaps-and-islands
-  * family. Batch complement to the streaming `session_window` path
-  * ([[graft.streaming.IncrementalPipeline]]): sessions merge points that
-  * are CLOSE, islands merge intervals that OVERLAP.
+  * family: where sessions merge points that are CLOSE, islands merge
+  * intervals that OVERLAP.
   */
 object IntervalOps {
 

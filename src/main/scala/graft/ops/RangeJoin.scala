@@ -46,15 +46,14 @@ object RangeJoin {
       .drop("_bucket")
   }
 
-  /** Batch twin of [[graft.streaming.IncrementalPipeline.intervalJoin]]:
-    * each left row joins right rows sharing `keyCol` whose event time
-    * falls within `[leftTs - toleranceSecs, leftTs]` — identical
-    * semantics, same right-side collision renaming (`right_<name>`), so
-    * the streaming operator has an oracle-checkable batch reference.
-    * Composed over [[pointInInterval]]: the RIGHT rows are the points
-    * (one bucket each) and each LEFT row's window replicates to the ≤
-    * tolerance/bucket + 1 buckets it spans — linear, never the
-    * BroadcastNestedLoopJoin a raw inequality join plans. */
+  /** The interval join: each left row joins right rows sharing `keyCol`
+    * whose event time falls within `[leftTs - toleranceSecs, leftTs]`,
+    * right-side columns that collide with a left name renamed
+    * `right_<name>`; gated as `interval_join_batch`. Composed over
+    * [[pointInInterval]]: the RIGHT rows are the points (one bucket each)
+    * and each LEFT row's window replicates to the ≤ tolerance/bucket + 1
+    * buckets it spans — linear, never the BroadcastNestedLoopJoin a raw
+    * inequality join plans. */
   def intervalJoin(
       left: DataFrame, leftTsCol: String,
       right: DataFrame, rightTsCol: String,

@@ -809,7 +809,6 @@ object StatOps {
     *
     * Scale shape: one keyed rollup; each key's series is collected —
     * bounded per-entity history (events per user), not corpus-sized.
-    * A key with unbounded history needs the streaming variant instead.
     *
     * @return one row per key: (`keyCol`, `n`, `last_value`, `ewma`)
     */

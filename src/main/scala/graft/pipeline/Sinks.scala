@@ -9,15 +9,15 @@ import org.apache.spark.sql.types.StructType
   * one protocol in two steps: [[stage]] writes an output to
   * `<dir>_staging` and returns the staged frame, and [[swap]] then per
   * output rotates (delete `<dir>_backup`, rename `<dir>` to it) and
-  * renames the staged directory to `<dir>`. [[commit]] is the two in a
-  * row; `Runner` stages a whole warehouse, deriving later tables from the
-  * staged frames, before one swap. Staging first means a frame may read
-  * the generation it replaces, and a failed write leaves every generation
-  * untouched. Reads go through [[readGeneration]], which recovers from
-  * the crash window a table's own rotate-then-rename has. Spark writes
-  * directories, not files, so the swap uses Hadoop FileSystem renames —
-  * atomic on HDFS-like stores, and exactly the generation semantics the
-  * reference gets from os.rename. */
+  * renames the staged directory to `<dir>`. [[writeParquetWithRotation]]
+  * is the two for one table; `Runner` stages a whole warehouse, deriving
+  * later tables from the staged frames, before one swap. Staging first
+  * means a frame may read the generation it replaces, and a failed write
+  * leaves every generation untouched. Reads go through
+  * [[readGeneration]], which recovers from the crash window a table's own
+  * rotate-then-rename has. Spark writes directories, not files, so the
+  * swap uses Hadoop FileSystem renames — atomic on HDFS-like stores, and
+  * exactly the generation semantics the reference gets from os.rename. */
 object Sinks {
 
   private def fileSystem(spark: SparkSession, dir: String) =
@@ -61,8 +61,7 @@ object Sinks {
   /** Make each staged `dir` current, in the order given: rotate `dir` to
     * `<dir>_backup`, then rename `<dir>_staging` to `dir`. Callers stage
     * every output first, so nothing moves unless every write succeeded,
-    * and order the swaps for their own crash windows (see the
-    * incremental-dedup sink). */
+    * and order the swaps for their own crash windows. */
   def swap(spark: SparkSession, dirs: Seq[String]): Unit =
     for (dir <- dirs) {
       val fs = fileSystem(spark, dir)
@@ -70,17 +69,13 @@ object Sinks {
       rename(fs, new Path(dir + "_staging"), new Path(dir))
     }
 
-  /** [[stage]] every `(dir, frame)` output, then [[swap]] them all. */
-  def commit(outputs: Seq[(String, DataFrame)]): Unit = {
-    for ((dir, df) <- outputs) stage(dir, df)
-    outputs.headOption.foreach { case (_, df) =>
-      swap(df.sparkSession, outputs.map(_._1))
-    }
+  /** Commit `df` as the next generation of the one table `dir`: [[stage]]
+    * it, then [[swap]] it in. Parquet is the engine-native clean-layer
+    * format. */
+  def writeParquetWithRotation(df: DataFrame, dir: String): Unit = {
+    stage(dir, df)
+    swap(df.sparkSession, Seq(dir))
   }
-
-  /** Parquet is the engine-native clean-layer format. */
-  def writeParquetWithRotation(df: DataFrame, dir: String): Unit =
-    commit(Seq(dir -> df))
 
   /** The MERGE plan itself, storage-free: incoming rows replace same-key
     * existing rows, new keys append, unmatched existing keys survive.
@@ -100,9 +95,10 @@ object Sinks {
     * reference's intended load (load.py:57 "githubIDs … can be dropped"
     * TODO; PK/UNIQUE DDL at migrations/001_core_schema.sql:46-66), which
     * it never shipped: [[mergeFrames]] over the current generation,
-    * committed as the next one. Because keys are deterministic (uuid5
-    * over natural keys), re-merging the same batch is a no-op — the
-    * pipeline's idempotence invariant, asserted in SinksExtractSpec.
+    * committed as the next one through [[writeParquetWithRotation]].
+    * Because keys are deterministic (uuid5 over natural keys),
+    * re-merging the same batch is a no-op — the pipeline's idempotence
+    * invariant, asserted in SinksExtractSpec.
     *
     * Shape at 100 TB: one left-anti shuffle join keyed on the merge key.
     * On a real warehouse, bucket the table by the key so the anti join
@@ -112,8 +108,10 @@ object Sinks {
   def mergeParquetOnKey(
       incoming: DataFrame, dir: String, keyCols: Seq[String]): DataFrame = {
     val spark = incoming.sparkSession
-    commit(Seq(dir -> readGeneration(spark, dir, Some(incoming.schema))
-      .fold(incoming)(mergeFrames(_, incoming, keyCols))))
+    writeParquetWithRotation(
+      readGeneration(spark, dir, Some(incoming.schema))
+        .fold(incoming)(mergeFrames(_, incoming, keyCols)),
+      dir)
     spark.read.parquet(dir)
   }
 
@@ -134,14 +132,14 @@ object Sinks {
   }
 
   /** Compact a parquet directory's small files into ~`targetRowsPerFile`
-    * files — the maintenance pass every incremental sink needs: streaming
-    * micro-batches and per-run MERGE staging each write a few rows per
-    * file, and at 100 TB a scan's task count (and the NameNode/liststore
+    * files — the maintenance pass an incremental sink needs: each
+    * per-run MERGE ([[mergeParquetOnKey]]) stages a few rows per file,
+    * and at 100 TB a scan's task count (and the NameNode/liststore
     * load) is proportional to FILE count, not data size. Reads once,
     * `repartitionByRange` on `sortCol` (so per-file min/max stats stay
     * tight — compaction is also the moment layout clustering happens,
     * cf. [[graft.ops.LayoutOps]]), then swaps the result in through
-    * [[commit]]. Returns the new file count. */
+    * [[writeParquetWithRotation]]. Returns the new file count. */
   def compactParquet(
       spark: SparkSession, dir: String, targetRowsPerFile: Long,
       sortCol: String): Int = {
@@ -149,7 +147,7 @@ object Sinks {
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val nFiles = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
-    commit(Seq(dir -> df.repartitionByRange(nFiles, col(sortCol))))
+    writeParquetWithRotation(df.repartitionByRange(nFiles, col(sortCol)), dir)
     nFiles
   }
 

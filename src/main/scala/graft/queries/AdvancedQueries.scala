@@ -101,13 +101,11 @@ object AdvancedQueries {
       "forward as-of join: earliest at-or-after state, FOLLOWING-frame " +
         "carry (linear; DuckDB ASOF oracle)"),
 
-    // Batch twin of the streaming interval join (attribution: clicks
+    // The interval join, RangeJoin.intervalJoin (attribution: clicks
     // within the 10 minutes AFTER each impression — here: click events
-    // within 10 min at-or-before each purchase, per user). Same
-    // tolerance semantics and right_<name> collision renaming as
-    // streaming.IncrementalPipeline.intervalJoin, so the watermark-bounded
-    // streaming operator has this oracle-checked batch reference. Oracle:
-    // the plain inequality join, exact.
+    // within 10 min at-or-before each purchase, per user), with its
+    // right_<name> collision renaming. Oracle: the plain inequality
+    // join, exact.
     Q(
       "interval_join_batch",
       (s, d) => {

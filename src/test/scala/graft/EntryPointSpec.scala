@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The program has four entry points — Verify, Bench, the pipeline Runner
   * and the per-gate profiler — and only they read the environment. A
   * one-off diagnostic main or an env knob elsewhere is code no caller
-  * keeps alive; this spec keeps new ones from creeping back in. */
+  * keeps alive; this spec keeps new ones from creeping back in. It also
+  * keeps incremental ingest to one path, the batch `pipeline.Runner`: no
+  * source uses Spark's streaming API. */
 class EntryPointSpec extends AnyFunSuite {
 
   private val entryPoints = Set(
@@ -34,5 +36,9 @@ class EntryPointSpec extends AnyFunSuite {
 
   test("only the four entry points read sys.env") {
     assert(filesWith("sys.env") == entryPoints)
+  }
+
+  test("no source uses Spark's streaming API") {
+    assert(filesWith("org.apache.spark.sql.streaming").isEmpty)
   }
 }

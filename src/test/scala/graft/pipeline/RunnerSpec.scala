@@ -14,7 +14,8 @@ import graft.SparkTestSession
   * across re-runs (the pipeline's core incremental invariant) — and over
   * distinct windows into one warehouse, where the dimensions must
   * accumulate every window seen so far, a failed run must move no table,
-  * and every Spark job must carry the caller's local properties. */
+  * a re-delivered window must change no clean table, and every Spark job
+  * must carry the caller's local properties. */
 class RunnerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val rawDir = "/root/reference/data/raw_data"
@@ -102,6 +103,13 @@ class RunnerSpec extends AnyFunSuite {
       .map(t => t -> spark.read.parquet(s"$outDir/$t").collect().toSet)
       .toMap
 
+  /** The DDL's 19 rules all hold over the warehouse at `outDir`. */
+  private def assertNoViolations(outDir: String): Unit = {
+    val violations = Validate.warehouse(spark, outDir)
+    assert(violations.size == 19)
+    assert(violations.forall(_.count == 0), violations.filter(_.count > 0))
+  }
+
   test("re-runs over distinct windows accumulate owners and users") {
     val root = Files.createTempDirectory("graft_rerun")
     val outDir = root.resolve("out").toString
@@ -151,9 +159,25 @@ class RunnerSpec extends AnyFunSuite {
     assert(contents(outDir)("repos_clean") != afterW1("repos_clean"))
     assert(Files.list(root.resolve("out")).iterator().asScala
       .forall(!_.getFileName.toString.endsWith("_staging")), "staging left behind")
-    val violations = Validate.warehouse(spark, outDir)
-    assert(violations.size == 19)
-    assert(violations.forall(_.count == 0), violations.filter(_.count > 0))
+    assertNoViolations(outDir)
+  }
+
+  test("re-delivering a whole window changes no clean table") {
+    val root = Files.createTempDirectory("graft_redeliver")
+    val w1 = window(root, 1, Seq(1))
+    val w2 = window(root, 2, Seq(2, 1))
+    val outDir = root.resolve("out").toString
+    Runner.run(spark, w1, outDir, fixedTs)
+    val audits2 = Runner.run(spark, w2, outDir, fixedTs)
+    val afterW2 = contents(outDir)
+    assert(Runner.run(spark, w2, outDir, fixedTs) == audits2)
+    val replayed = contents(outDir)
+    for (e <- entities) {
+      assert(replayed(s"${e}_clean") == afterW2(s"${e}_clean"), e)
+      assert(replayed(s"${e}_clean_backup") == afterW2(s"${e}_clean"),
+        s"$e backup is not the replaced generation")
+    }
+    assertNoViolations(outDir)
   }
 
   test("every job of a run carries the caller's local properties; staged " +
