@@ -43,9 +43,7 @@ import graft.ops.Staging.StagedDf
   * once, so carrying logical plans across rounds grows them
   * exponentially — analysis alone would dominate long before the data
   * does. Checkpointing per round keeps the plan O(1) per round (exactly
-  * why GraphFrames' connectedComponents checkpoints periodically); on a
-  * real cluster set `spark.graft.reliableCheckpoints=true` plus a
-  * checkpoint dir so an executor loss can't kill a deep iteration.
+  * why GraphFrames' connectedComponents checkpoints periodically).
   * Replaced rounds' blocks are reclaimed by the ContextCleaner once
   * unreferenced. The driver loop holds only iteration counters, never
   * data.
@@ -313,15 +311,11 @@ object GraphOps {
         // slower one, not the sum. Spark's scheduler is safe for
         // multi-threaded job submission; each thread touches only its
         // own Observation/pin chain.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fwdF = Future(minLabelFix(
-          eAct.select(col("src").as("u"), col("dst").as("v")), nodes))
-        val bwdF = Future(minLabelFix(
-          eAct.select(col("dst").as("u"), col("src").as("v")), nodes))
-        val fwd = Await.result(fwdF, Duration.Inf)
-        val bwd = Await.result(bwdF, Duration.Inf)
+        val Seq(fwd, bwd) = Staging.concurrently(Seq(
+          () => minLabelFix(
+            eAct.select(col("src").as("u"), col("dst").as("v")), nodes),
+          () => minLabelFix(
+            eAct.select(col("dst").as("u"), col("src").as("v")), nodes)))
         val now = fwd
           .join(bwd.select(col("id"), col("lab").as("_b")), Seq("id"))
           .filter(col("lab") === col("_b"))
@@ -422,22 +416,16 @@ object GraphOps {
       // only the PREVIOUS batch's pinned frames — independent
       // materializations, submitted concurrently (guide §2.6) so the
       // batch pays ~one pin of wall latency, not three in sequence.
-      {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val settledF = Future((if (settled == null) newly
-          else settled.unionByName(newly)).stagePin())
-        val obs = Observation()
-        val activeF = Future(act
-          .observe(obs, count(lit(1)).as("m"))
-          .stagePin())
-        val eActF = Future(eac.stagePin())
-        settled = Await.result(settledF, Duration.Inf)
-        active = Await.result(activeF, Duration.Inf)
-        remaining = obs.get("m").asInstanceOf[Long]
-        eAct = Await.result(eActF, Duration.Inf)
-      }
+      val obs = Observation()
+      val Seq(s, a, ea) = Staging.concurrently(Seq(
+        () => (if (settled == null) newly
+          else settled.unionByName(newly)).stagePin(),
+        () => act.observe(obs, count(lit(1)).as("m")).stagePin(),
+        () => eac.stagePin()))
+      settled = s
+      active = a
+      remaining = obs.get("m").asInstanceOf[Long]
+      eAct = ea
       layer += batch
     }
     val out = lbl
@@ -684,24 +672,19 @@ object GraphOps {
     // nodes / eDeg / eDst read only the pinned e — independent
     // materializations, submitted concurrently (guide §2.6) so the
     // stage pays ~one pin of wall latency on an otherwise-idle box.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val nObs = Observation()
-    val nodesF = Future(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .repartition(col("id"))
-      .observe(nObs, count(lit(1)).as("n"))
-      .stagePinSized())
-    val eDegF = Future(e
-      .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .repartition(col("src"))
-      .stagePinSized())
-    val eDstF = Future(e.repartition(col("dst")).stagePinSized())
-    val nodes = Await.result(nodesF, Duration.Inf)
-    val eDeg = Await.result(eDegF, Duration.Inf)
-    val eDst = Await.result(eDstF, Duration.Inf)
+    val Seq(nodes, eDeg, eDst) = Staging.concurrently(Seq(
+      () => e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id")))
+        .distinct()
+        .repartition(col("id"))
+        .observe(nObs, count(lit(1)).as("n"))
+        .stagePinSized(),
+      () => e
+        .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+        .repartition(col("src"))
+        .stagePinSized(),
+      () => e.repartition(col("dst")).stagePinSized()))
     DirectedGraphStage(e, eDst, nodes, eDeg,
       nObs.get("n").asInstanceOf[Long])
   }
@@ -2497,13 +2480,10 @@ object GraphOps {
       .stagePin() // two consumers: degrees and the neighbor-label join
     // deg and m read only the pinned frames — independent
     // materializations, submitted concurrently (guide §2.6).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val degF = Future(
-      und.groupBy("u").agg(count(lit(1)).as("deg")).stagePin())
-    val mF = Future(e0.agg(count(lit(1)).as("m")).stagePin())
-    (und, Await.result(degF, Duration.Inf), Await.result(mF, Duration.Inf))
+    val Seq(deg, m) = Staging.concurrently(Seq(
+      () => und.groupBy("u").agg(count(lit(1)).as("deg")).stagePin(),
+      () => e0.agg(count(lit(1)).as("m")).stagePin()))
+    (und, deg, m)
   }
 
   /** One move phase against fixed graph frames and the CURRENT labels

@@ -28,10 +28,10 @@ import org.apache.spark.sql.Dataset
   * plan would share a CacheManager entry, so neither could be released
   * safely). Holding the lock through a build is safe because memo
   * traffic is sequential — Bench passes, Verify, the perfbench mix and
-  * the forked test JVM run one gate at a time; the `Future`s inside
-  * [[GraphOps]] never call a memo — and a nested build only re-enters
-  * other memos, or the same memo on the same thread (`synchronized` is
-  * reentrant).
+  * the forked test JVM run one gate at a time; the tasks run by
+  * [[Staging.concurrently]] never call a memo — and a nested build only
+  * re-enters other memos, or the same memo on the same thread
+  * (`synchronized` is reentrant).
   *
   * Two kinds, stated where each memo is declared:
   *  - [[Memo.staging]] holds INPUT staging (trade edges, co-purchase

@@ -777,22 +777,17 @@ object SimilarityOps {
         .select(col("j").as("i"), col("i").as("j"), col("cov")))
       .repartition(1)
       .stagePin()
-    def pinnedSum(arr: Column): Column =
-      aggregate(
-        slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
-        element_at(arr, 1),
-        (acc, x) => acc + x)
     def matVec(v: DataFrame): DataFrame = full
       .join(v.select(col("i").as("j"), col("v").as("vj")), "j")
       .select(col("i"), col("j"), (col("cov") * col("vj")).as("t"))
       .groupBy("i")
       .agg(sort_array(collect_list(struct(col("j"), col("t")))).as("_s"))
       .select(col("i"),
-        pinnedSum(transform(col("_s"), x => x.getField("t"))).as("w"))
+        TextOps.pinnedSum(transform(col("_s"), x => x.getField("t"))).as("w"))
     var v = full.select(col("i")).distinct().withColumn("v", lit(1.0))
     for (r <- 1 to iters) {
       val w = matVec(v.withColumnRenamed("v", "v").select(col("i"), col("v")))
-      val n2 = w.agg(pinnedSum(transform(
+      val n2 = w.agg(TextOps.pinnedSum(transform(
         sort_array(collect_list(struct(col("i"), col("w")))),
         x => x.getField("w") * x.getField("w"))).as("n2"))
       v = w.crossJoin(broadcast(n2)) // 1-row norm frame (declared)
@@ -802,7 +797,7 @@ object SimilarityOps {
     }
     val u = matVec(v)
     val lam = v.join(u, "i")
-      .agg(pinnedSum(transform(
+      .agg(TextOps.pinnedSum(transform(
         sort_array(collect_list(struct(col("i"), (col("v") * col("w")).as("p")))),
         x => x.getField("p"))).as("lambda"))
     v.crossJoin(broadcast(lam)) // 1-row Rayleigh frame (declared)

@@ -1,49 +1,29 @@
 package graft.ops
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
-/** The lineage-truncating stage pin every iterative/staged operator uses
+/** Staging for iterative and staged operators.
+  *
+  * [[pin]] is the lineage-truncating stage pin every such operator uses
   * (graph fixpoints, BPE rounds, range-staged global sums): a round's
   * output references its input more than once, so carrying logical plans
   * across rounds grows them exponentially — each round is pinned to
-  * materialized blocks instead.
+  * materialized blocks instead. A pin is `localCheckpoint(eager = true)`:
+  * executor-local blocks, no filesystem round trip; a lost executor
+  * takes its blocks with it and fails the iteration. Replaced rounds'
+  * blocks are reclaimed by the ContextCleaner once unreferenced.
   *
-  * Two modes, one flag:
-  *  - default: `localCheckpoint(eager = true)` — executor-local blocks,
-  *    no filesystem round trip; right at local[*] and for short-lived
-  *    iterations, but NOT resilient to executor loss (a lost executor
-  *    invalidates the blocks and kills a deep iteration).
-  *  - `spark.graft.reliableCheckpoints=true` (plus a
-  *    `SparkContext.setCheckpointDir`): every pin becomes a reliable
-  *    `checkpoint(eager = true)` to the checkpoint filesystem — the
-  *    cluster-mode hardening for long iterations on preemptible
-  *    executors. Same semantics, same plan truncation; only the block
-  *    durability changes, which is why the spec re-runs the iterative
-  *    operators under this mode and asserts identical results.
-  *
-  * Reliable mode ALSO requires
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a
-  * context-start conf): without it Spark never reclaims reliable
-  * checkpoint files, so every pinned round of a deep iteration would
-  * accumulate on the checkpoint filesystem until the app exits — a
-  * 100-round fixpoint leaving 100 full label copies behind. With it,
-  * replaced rounds' files are deleted by the ContextCleaner once the
-  * pinned frame is unreferenced, matching local mode's block
-  * reclamation. Both requirements fail fast at the driver.
-  */
+  * [[concurrently]] is the one way the program runs Spark jobs side by
+  * side (the Runner's dependent stages, GraphOps' independent pins and
+  * fixpoints). Its threads are made by the calling thread, so every job
+  * they start carries the caller's Spark local properties. */
 object Staging {
-  val ReliableKey = "spark.graft.reliableCheckpoints"
 
-  def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val reliable = spark.conf.getOption(ReliableKey).exists(_.toBoolean)
-    val pinned =
-      if (reliable)
-        pinReliable(df,
-          dirDefined = spark.sparkContext.getCheckpointDir.isDefined,
-          cleanerEnabled = spark.sparkContext.getConf.getBoolean(
-            "spark.cleaner.referenceTracking.cleanCheckpoints", false))
-      else df.localCheckpoint(true)
+  def pin(df: DataFrame): DataFrame =
     // CAP the checkpoint leaf's carried-over origin stats: a pin's
     // whole job is to TRUNCATE lineage, but the copied size estimate
     // re-links it — in a self-referencing fixpoint (round r joins round
@@ -53,24 +33,19 @@ object Staging {
     // stripping — measured 4× on hitsUnits when small pinned frames lost
     // their broadcast-hash joins) resets the compounding at every pin
     // ([[org.apache.spark.sql.GraftColumnBridge.withCappedOriginStats]]).
-    org.apache.spark.sql.GraftColumnBridge.withCappedOriginStats(pinned)
-  }
+    org.apache.spark.sql.GraftColumnBridge.withCappedOriginStats(
+      df.localCheckpoint(true))
 
-  /** The reliable branch with its preconditions explicit — split out so
-    * the guard is testable regardless of the shared test session's
-    * context state (a checkpoint dir, once set, cannot be unset). */
-  private[ops] def pinReliable(
-      df: DataFrame, dirDefined: Boolean,
-      cleanerEnabled: Boolean): DataFrame = {
-    require(dirDefined,
-      s"$ReliableKey=true requires SparkContext.setCheckpointDir " +
-        "(the reliable checkpoint filesystem)")
-    require(cleanerEnabled,
-      s"$ReliableKey=true requires " +
-        "spark.cleaner.referenceTracking.cleanCheckpoints=true at context " +
-        "start — otherwise every pinned round accumulates on the " +
-        "checkpoint filesystem until the app exits")
-    df.checkpoint(true)
+  /** Run each task on its own thread and return the results in order,
+    * after every task has finished; the first failure is rethrown then.
+    * The threads are made here, by the calling thread, so each inherits
+    * its Spark local properties (job group, description, tags). */
+  def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try pool.invokeAll(tasks.map(t => (() => t()): Callable[A]).asJava)
+      .asScala.toSeq
+      .map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    finally pool.shutdown()
   }
 
   /** [[pin]] + re-seat the pinned leaf's stats with the frame's ACTUAL
@@ -104,8 +79,7 @@ object Staging {
     else df.repartition(session)
   }
 
-  /** `df.stagePin()` — drop-in for `df.localCheckpoint(true)` honoring
-    * the reliable-checkpoint flag; `df.stagePinSized()` — same, with
+  /** `df.stagePin()` — [[pin]]; `df.stagePinSized()` — same, with
     * actual-size stats for join-strategy-sensitive frames;
     * `df.spreadForCompute()` — see [[Staging.spreadForCompute]]. */
   implicit class StagedDf(private val df: DataFrame) extends AnyVal {

@@ -15,6 +15,15 @@ import graft.ops.Staging.StagedDf
   * text analytics.) */
 object TextOps {
 
+  /** The sum of a numeric array folded left to right, seeded with its
+    * first element (DuckDB's seedless `list_reduce`): an order-pinned
+    * float sum, a pure function of the array on any engine. */
+  private[ops] def pinnedSum(arr: Column): Column =
+    aggregate(
+      slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
+      element_at(arr, 1),
+      (acc, x) => acc + x)
+
   /** Whitespace tokens; the BPE-ish variant splits punctuation off too. */
   def tokens(text: Column): Column = split(text, " +")
 
@@ -260,11 +269,6 @@ object TextOps {
       .filter(col("w") =!= 0.0)
       .select("id", "token", "w")
       .stagePin() // norms + both pair sides read it
-    def pinnedSum(arr: Column): Column =
-      aggregate(
-        slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
-        element_at(arr, 1),
-        (acc, x) => acc + x)
     val norms = w
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("token"), col("w")))).as("_s"),
@@ -372,11 +376,6 @@ object TextOps {
       .filter(col("w") =!= 0.0)
       .select("id", "token", "w", "df")
       .stagePin()
-    def pinnedSum(arr: Column): Column =
-      aggregate(
-        slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
-        element_at(arr, 1),
-        (acc, x) => acc + x)
     val norms = w
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("token"), col("w")))).as("_s"))

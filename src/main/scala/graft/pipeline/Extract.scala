@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Paginated REST extraction (extract.py:43-162) with the network boundary
   * behind an injectable fetcher, so the whole pipeline runs offline against
@@ -196,10 +196,7 @@ object Extract {
       .toSeq
 
   /** Parse raw JSON page payloads into rows with an explicit ingestion
-    * ordinal — the keep-last dedupe key order. Each payload is a JSON
-    * array; `from_json` + explode preserves within-page order, and the
-    * (page, index) pair gives a total arrival order that survives any
-    * repartitioning (SURVEY §7.6 hard part #1). */
+    * ordinal — the keep-last dedupe key order (`explodePages`). */
   def parsePages(
       spark: SparkSession,
       pages: Seq[String],
@@ -208,17 +205,25 @@ object Extract {
     import spark.implicits._
     val ds: Dataset[(Int, String)] = pages.zipWithIndex
       .map { case (payload, i) => (i, payload) }.toDS()
-    val arr = org.apache.spark.sql.types.ArrayType(schema)
-    var df = ds
-      .toDF("_page", "_payload")
-      .select(col("_page"),
-        posexplode(from_json(col("_payload"), arr)).as(Seq("_pos", "rec")))
+    val df = explodePages(ds.toDF("_page", "_payload"), schema)
+    tag.fold(df) { case (k, v) => df.withColumn(k, lit(v)) }
+  }
+
+  /** One row per record of `pages`' JSON-array payloads (`_page`,
+    * `_payload`), then `_ingest_ord`, then the `carried` columns.
+    * `from_json` + `posexplode` keeps within-page order, and the ordinal
+    * `_page * 1000000 + position` gives a total arrival order that
+    * survives any repartitioning (SURVEY §7.6 hard part #1). */
+  private def explodePages(
+      pages: DataFrame, schema: StructType,
+      carried: Seq[String] = Nil): DataFrame =
+    pages
+      .select(carried.map(col) ++ Seq(col("_page"),
+        posexplode(from_json(col("_payload"), ArrayType(schema)))
+          .as(Seq("_pos", "rec"))): _*)
       .withColumn("_ingest_ord",
         col("_page").cast("long") * 1000000L + col("_pos"))
-      .select(col("rec.*"), col("_ingest_ord"))
-    tag.foreach { case (k, v) => df = df.withColumn(k, lit(v)) }
-    df
-  }
+      .select((col("rec.*") +: col("_ingest_ord") +: carried.map(col)): _*)
 
   /** repos → eligibility filter (extract.py:67-69) drives the fan-out:
     * issues and branches are fetched only for non-private, non-archived,
@@ -246,39 +251,28 @@ object Extract {
     * serializable fixture readers; a real impl carries connection config,
     * not connections, and opens them per partition).
     *
-    * Page payloads parse into columns via one `from_json` projection, with
-    * the same per-repo `(page, index)` ingestion ordinal the keep-last
-    * dedupe orders by (SURVEY §7.6). NOTE: extraction is lazy — the Runner
-    * persists the raw layer immediately, so a Spark retry re-fetches at
-    * most one partition's repos, and downstream reads hit the sink. */
+    * Each repo runs the page loop of [[fetchPages]], and its payloads
+    * parse like [[parsePages]]' (`explodePages`), with a per-repo
+    * `(page, index)` ingestion ordinal. NOTE: extraction is lazy — the
+    * Runner persists the raw layer immediately, so a Spark retry
+    * re-fetches at most one partition's repos, and downstream reads hit
+    * the sink. */
   def extractPerRepo(
       spark: SparkSession, fetcher: Fetcher, cfg: Config,
       repoNames: Seq[String], kind: String, schema: StructType,
       retry: RetryPolicy = RetryPolicy()): DataFrame = {
     import spark.implicits._
     val base = schema.copy(fields = schema.fields.filterNot(_.name == "repo_name"))
-    val owner = cfg.owner
-    val maxPages = cfg.maxPages
     val slices = math.max(1, math.min(repoNames.size, 32))
     val pages: Dataset[(String, Int, String)] = spark
       .createDataset(repoNames)(Encoders.STRING)
       .repartition(slices)
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          (1 to maxPages).iterator
-            .map(p => (p, withRetry(retry)(fetcher(s"/repos/$owner/$r/$kind", p))))
-            .takeWhile(_._2.isDefined)
-            .map { case (p, payload) => (r, p - 1, payload.get) }
-        }
-      }
-    pages
-      .toDF("repo_name", "_page", "_payload")
-      .select(col("repo_name"), col("_page"),
-        posexplode(from_json(col("_payload"),
-          org.apache.spark.sql.types.ArrayType(base))).as(Seq("_pos", "rec")))
-      .withColumn("_ingest_ord",
-        col("_page").cast("long") * 1000000L + col("_pos"))
-      .select((col("rec.*") +: Seq(col("_ingest_ord"), col("repo_name"))): _*)
+      .mapPartitions(_.flatMap { r =>
+        fetchPages(fetcher, s"/repos/${cfg.owner}/$r/$kind", cfg, retry)
+          .zipWithIndex.map { case (payload, p) => (r, p, payload) }
+      })
+    explodePages(pages.toDF("repo_name", "_page", "_payload"), base,
+      Seq("repo_name"))
   }
 
   def extractIssues(

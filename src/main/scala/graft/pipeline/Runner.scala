@@ -1,15 +1,12 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.expr.ReferenceConstant
+import graft.ops.Staging
 
 /** End-to-end pipeline orchestration: the reference's module-level run
   * (transform.py:492-497) as one idempotent function, planned along its
@@ -17,8 +14,9 @@ import graft.expr.ReferenceConstant
   * rather than the reference's import order:
   *
   *  1. repos is staged ([[Sinks.stage]]) first;
-  *  1. owners, branches and issues are staged concurrently from the
-  *     staged repos frame, and users from the staged issues;
+  *  1. owners, branches and issues are staged concurrently
+  *     ([[graft.ops.Staging.concurrently]]) from the staged repos frame,
+  *     and users from the staged issues;
   *  1. all five tables are swapped in one pass ([[Sinks.swap]]: rotate,
   *     then rename, per table). Nothing rotates unless every staged write
   *     succeeded, so a failed run leaves the whole warehouse at its
@@ -52,18 +50,6 @@ object Runner {
     if (!fs.exists(p)) None
     else Some(Transform.withIngestOrd(
       spark.read.schema(schema).option("multiLine", "true").json(path)))
-  }
-
-  /** Run each task on its own thread and return the results in order,
-    * after every task has finished; the first failure is rethrown then.
-    * The threads are made here, by the calling thread, so each inherits
-    * its Spark local properties (job group, description, tags). */
-  private def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
-    val pool = Executors.newFixedThreadPool(tasks.size)
-    try pool.invokeAll(tasks.map(t => (() => t()): Callable[A]).asJava)
-      .asScala.toSeq
-      .map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
-    finally pool.shutdown()
   }
 
   /** Run the full clean layer over a raw directory. Returns audits in
@@ -110,7 +96,7 @@ object Runner {
     val ingested = ReferenceConstant.of(spark, ingestedAt)
     def generation(entity: String, schema: StructType) =
       Sinks.readGeneration(spark, dir(entity), Some(schema))
-    val dependents = concurrently(Seq(
+    val dependents = Staging.concurrently(Seq(
       () => Seq(stage("owners",
         Transform.cleanOwners(repos, generation("owners", Schemas.ownersClean)),
         reposAudit.rowsOut)._2),

@@ -95,7 +95,8 @@ object Sinks {
     * reference's intended load (load.py:57 "githubIDs … can be dropped"
     * TODO; PK/UNIQUE DDL at migrations/001_core_schema.sql:46-66), which
     * it never shipped: [[mergeFrames]] over the current generation,
-    * committed as the next one through [[writeParquetWithRotation]].
+    * committed as the next one through [[writeParquetWithRotation]] and
+    * read back with the schema it was written with (no inference job).
     * Because keys are deterministic (uuid5 over natural keys),
     * re-merging the same batch is a no-op — the pipeline's idempotence
     * invariant, asserted in SinksExtractSpec.
@@ -108,11 +109,10 @@ object Sinks {
   def mergeParquetOnKey(
       incoming: DataFrame, dir: String, keyCols: Seq[String]): DataFrame = {
     val spark = incoming.sparkSession
-    writeParquetWithRotation(
-      readGeneration(spark, dir, Some(incoming.schema))
-        .fold(incoming)(mergeFrames(_, incoming, keyCols)),
-      dir)
-    spark.read.parquet(dir)
+    val merged = readGeneration(spark, dir, Some(incoming.schema))
+      .fold(incoming)(mergeFrames(_, incoming, keyCols))
+    writeParquetWithRotation(merged, dir)
+    spark.read.schema(merged.schema).parquet(dir)
   }
 
   /** Bucketed warehouse table: pre-shuffles rows into `buckets` files per

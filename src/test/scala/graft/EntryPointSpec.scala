@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * one-off diagnostic main or an env knob elsewhere is code no caller
   * keeps alive; this spec keeps new ones from creeping back in. It also
   * keeps incremental ingest to one path, the batch `pipeline.Runner`: no
-  * source uses Spark's streaming API. */
+  * source uses Spark's streaming API; and concurrent Spark jobs to one
+  * mechanism, `ops.Staging.concurrently`, whose threads inherit the
+  * caller's local properties. */
 class EntryPointSpec extends AnyFunSuite {
 
   private val entryPoints = Set(
@@ -40,5 +42,10 @@ class EntryPointSpec extends AnyFunSuite {
 
   test("no source uses Spark's streaming API") {
     assert(filesWith("org.apache.spark.sql.streaming").isEmpty)
+  }
+
+  test("only Staging.concurrently starts threads") {
+    assert((filesWith("scala.concurrent"), filesWith("Executors.")) ==
+      ((Set.empty[String], Set("ops/Staging.scala"))))
   }
 }

@@ -11,9 +11,6 @@ object SparkTestSession {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      // reliable-checkpoint mode (StagingSpec) requires the cleaner to
-      // reclaim replaced rounds' checkpoint files
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
       // the deployment-grade SQL surface: the test session is built the
       // way a cluster user would build theirs, so specs can assert the

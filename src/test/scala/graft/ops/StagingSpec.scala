@@ -1,67 +1,17 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** Reliable-checkpoint mode ([[Staging]]): the same iterative operators,
-  * pinned to the checkpoint FILESYSTEM instead of executor-local blocks —
-  * the cluster hardening for executor loss. Results must be identical in
-  * both modes; only block durability changes. */
+/** [[Staging]]: the pin caps the stats its checkpoint leaf carries, and
+  * every job the concurrent stages start runs under its caller's Spark
+  * local properties. */
 class StagingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-
-  private def withReliable[A](body: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reliable_cp")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set(Staging.ReliableKey, "true")
-    try body
-    finally {
-      spark.conf.unset(Staging.ReliableKey)
-      // ls includes the per-app subdir Spark creates; leave files for the
-      // temp reaper — the assertion below only needs them to EXIST
-    }
-  }
-
-  test("iterative ops produce identical results under reliable checkpoints") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 3L), (9L, 10L), (10L, 5L))
-    val rows = (1L to 50L).map(i => (i, (i * 7 % 13).toDouble))
-
-    val ccLocal = GraphOps.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
-    val rnLocal = StatOps
-      .globalRowNumber(rows.toDF("id", "v"), Seq(col("v"), col("id")), "rn")
-      .select("id", "rn").as[(Long, Long)].collect().toMap
-    def brandes() = {
-      val (bw, eb) = GraphOps.landmarkBrandesUnits(
-        edges.toDF("a", "b"), "a", "b",
-        Seq(1L, 9L).toDF("id"), "id", maxHops = 3)
-      (bw.as[(Long, Long)].collect().toMap,
-        eb.as[(Long, Long, Long)].collect()
-          .map(r => (r._1, r._2) -> r._3).toMap)
-    }
-    val brLocal = brandes()
-
-    val (ccRel, rnRel, brRel, cpFiles) = withReliable {
-      val cc = GraphOps.connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .as[(Long, Long)].collect().toMap
-      val rn = StatOps
-        .globalRowNumber(rows.toDF("id", "v"), Seq(col("v"), col("id")), "rn")
-        .select("id", "rn").as[(Long, Long)].collect().toMap
-      val br = brandes()
-      val cpDir = new java.io.File(
-        new java.net.URI(spark.sparkContext.getCheckpointDir.get))
-      def count(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(count).sum else 1
-      (cc, rn, br, count(cpDir))
-    }
-    assert(ccRel == ccLocal)
-    assert(rnRel == rnLocal)
-    assert(brRel == brLocal)
-    assert(cpFiles > 0, "reliable mode wrote nothing to the checkpoint dir")
-  }
 
   test("pin caps inflated origin stats on the checkpoint leaf") {
     // Direct unit assert for GraftColumnBridge.withCappedOriginStats —
@@ -103,20 +53,48 @@ class StagingSpec extends AnyFunSuite {
       s"small pinned frame should keep a realistic estimate, got ${s.sizeInBytes}")
   }
 
-  test("reliable mode preconditions fail fast at the driver") {
+  test("GraphOps' concurrent stages start every job under the caller's " +
+      "local properties") {
     import spark.implicits._
-    // the guard is exercised through pinReliable's explicit parameters —
-    // a context-level checkpoint dir can never be UNSET on the shared
-    // session, so driving it through pin() would be order-dependent
-    // (whichever test set the dir first would make this branch dead)
-    val fresh = Seq((1L, 2L)).toDF("a", "b")
-    val noDir = intercept[IllegalArgumentException] {
-      Staging.pinReliable(fresh, dirDefined = false, cleanerEnabled = true)
+    // Each call sets its own value of `prop` on the calling thread, so a
+    // job from a thread made before the call (a shared pool's) carries an
+    // earlier call's value, or none.
+    val edges = (0 until 200).map(i => (i % 50L, (i * 13L + 7) % 50L))
+      .filter { case (a, b) => a != b }.toDF("a", "b")
+    val ops = Seq[(String, () => Any)](
+      "directed" -> (() => GraphOps.stageDirectedGraph(edges, "a", "b")),
+      "scc" -> (() => GraphOps.stronglyConnectedComponents(edges, "a", "b")),
+      "condensation" -> (() => GraphOps.condensationLayers(edges, "a", "b")),
+      "louvain" -> (() => GraphOps.stageLouvainGraph(edges, "a", "b")))
+    val prop = "graft.test.staging"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tags.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty(prop))).getOrElse("none"))
     }
-    assert(noDir.getMessage.contains("setCheckpointDir"))
-    val noCleaner = intercept[IllegalArgumentException] {
-      Staging.pinReliable(fresh, dirDefined = true, cleanerEnabled = false)
-    }
-    assert(noCleaner.getMessage.contains("cleanCheckpoints"))
+    spark.sparkContext.addSparkListener(listener)
+    val calls =
+      try for (caller <- Seq("gate1", "gate2", "gate3"); (op, run) <- ops)
+        yield {
+          spark.sparkContext.setLocalProperty(prop, s"$caller $op")
+          run()
+          s"$caller $op"
+        }
+      finally spark.sparkContext.setLocalProperty(prop, null)
+    Thread.sleep(2000) // listener bus is async; let job-start events drain
+    spark.sparkContext.removeSparkListener(listener)
+
+    val seen = tags.asScala.toSeq
+    val jobs = seen.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(seen == calls.flatMap(c => Seq.fill(jobs.getOrElse(c, 0))(c)),
+      s"job tags in start order: $seen")
+    // Jobs per call when GraphOps ran these stages on Scala's global
+    // pool (counted by time window, as the tags were unreliable then).
+    // Condensation's count varies by a few jobs from run to run.
+    val before = Map("directed" -> 11, "scc" -> 125, "louvain" -> 7)
+    for (c <- calls; (op, n) <- before if c.endsWith(s" $op"))
+      assert(jobs.getOrElse(c, 0) <= n, s"$c started ${jobs.get(c)} jobs")
   }
 }

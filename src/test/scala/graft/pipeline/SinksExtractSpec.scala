@@ -203,6 +203,33 @@ class SinksExtractSpec extends AnyFunSuite {
       expected + org.apache.spark.sql.Row(4L, "dan", "v3"))
   }
 
+  test("a merge reads its new generation back without schema inference") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_merge_schema").toString + "/t"
+    // A job's call site is its stages' name. A read without a schema
+    // infers one in a `parquet at <file>:<line>` job that, unlike a
+    // write's jobs, runs outside any SQL execution.
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+            .forall(_.getProperty("spark.sql.execution.id") == null))
+          js.stageInfos.foreach(si => sites.add(si.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val merged = try {
+      Sinks.mergeParquetOnKey(Seq((1L, "a")).toDF("id", "v"), dir, Seq("id"))
+      Sinks.mergeParquetOnKey(Seq((2L, "b")).toDF("id", "v"), dir, Seq("id"))
+    } finally {
+      Thread.sleep(2000) // listener bus is async; let job-start events drain
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val inference = sites.asScala.filter(_.startsWith("parquet at Sinks"))
+    assert(inference.isEmpty, inference)
+    assert(merged.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+  }
+
   test("compaction rewrites many small files into few range-sorted ones") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_compact").toString + "/t"
