@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one timed pass over every registered query at
   * SPARK_GRAFT_SF_DIR, after an untimed warmup pass at sf0.001 that
   * triggers codegen/JIT/class-loading once per query shape (standard
@@ -13,38 +11,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val localDir = {
-      val d = new java.io.File("/dev/shm/graft-spark-local")
-      if (d.exists() || d.mkdirs()) d.getAbsolutePath
-      else System.getProperty("java.io.tmpdir")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir) // shuffle/spill on tmpfs
-      // The whole-stage-codegen cache defaults to 100 entries; this suite
-      // compiles ~5 stages x 55 queries per pass, so the default LRU
-      // evicts everything every pass and Janino recompiles the world —
-      // the warmup pass only pays off if its compiled classes survive.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // Default periodic-GC interval is 30 min: shuffle files and
-      // broadcast pins from ~220 query executions would accumulate for
-      // the whole run. But an in-pass System.gc() on a 48 GiB heap is a
-      // multi-second pause landing on whichever query is running —
-      // round-2 medians showed exactly that. GC is instead forced
-      // explicitly BETWEEN passes (below); the periodic cleaner is kept
-      // as a long-stop only — and it must be LONGER than the whole run:
-      // at 10min it fired mid-pass once the second warmup pushed the run
-      // past 10 minutes of JVM lifetime, landing a multi-second pause on
-      // one roaming pass per run (observed as a 12-15s pass-total spike).
-      .config("spark.cleaner.periodicGC.interval", "30min")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      Session.tmpfsLocalDir)
 
     // Warmup failures are LOGGED (name + exception class), never silently
     // swallowed: a query that crashes only at one scale factor would

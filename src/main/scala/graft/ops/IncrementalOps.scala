@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Both operators are ONE keyed shuffle join over the inputs — linear in
   * the snapshot size, no driver state. On a real warehouse both sides are
-  * bucketed by the key ([[graft.pipeline.Sinks.writeBucketedTable]]), so
-  * the join co-locates with zero exchanges and the cost is a merge of
-  * sorted buckets — the only plan that survives a 100 TB dimension.
+  * bucketed by the key, so the join co-locates with zero exchanges and
+  * the cost is a merge of sorted buckets — the only plan that survives a
+  * 100 TB dimension.
   */
 object IncrementalOps {
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Session
 import graft.expr.ReferenceConstant
 import graft.ops.Staging
 
@@ -130,13 +131,7 @@ object Runner {
   def main(args: Array[String]): Unit = {
     val rawDir = if (args.nonEmpty) args(0) else "/root/reference/data/raw_data"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline_out"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     run(spark, rawDir, outDir).foreach(a => println(auditLine(a)))
     Validate.warehouse(spark, outDir).filter(_.count > 0)
       .foreach(v => println(s"VIOLATION ${v.rule}: ${v.count}"))

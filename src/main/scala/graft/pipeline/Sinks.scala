@@ -115,22 +115,6 @@ object Sinks {
     spark.read.schema(merged.schema).parquet(dir)
   }
 
-  /** Bucketed warehouse table: pre-shuffles rows into `buckets` files per
-    * partition keyed by `key` (sorted within buckets), so every later join
-    * or aggregation on `key` between co-bucketed tables plans with NO
-    * exchange — at 100 TB the difference between each join re-shuffling
-    * the fact table and none of them shuffling at all. Asserted in
-    * SinksExtractSpec: a join of two co-bucketed tables contains no
-    * Exchange node. Spark bucketing requires a table catalog entry, so
-    * this sink is saveAsTable-based with an optional external path. */
-  def writeBucketedTable(
-      df: DataFrame, table: String, key: String, buckets: Int,
-      path: Option[String] = None): Unit = {
-    val w0 = df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key)
-    path.fold(w0)(p => w0.option("path", p)).saveAsTable(table)
-  }
-
   /** Compact a parquet directory's small files into ~`targetRowsPerFile`
     * files — the maintenance pass an incremental sink needs: each
     * per-run MERGE ([[mergeParquetOnKey]]) stages a few rows per file,
@@ -150,20 +134,6 @@ object Sinks {
     writeParquetWithRotation(df.repartitionByRange(nFiles, col(sortCol)), dir)
     nFiles
   }
-
-  /** JDBC sink in FK dependency order, github-id lineage columns dropped
-    * before load per the reference's own TODO (load.py:57). Idempotence
-    * comes from deterministic keys: overwrite (or stage + MERGE on stores
-    * that support it) always converges to the same rows. */
-  def writeJdbc(
-      tables: Seq[(String, DataFrame)],
-      url: String,
-      props: java.util.Properties): Unit =
-    tables.foreach { case (name, df) =>
-      val lineage = df.columns.filter(_.startsWith("github_"))
-      df.drop(lineage: _*)
-        .write.mode("overwrite").jdbc(url, name, props)
-    }
 
   /** Per-store SQL for the staged key-matched upsert ([[mergeJdbc]]):
     * `mergeSql` merges a staging table into the target on the key

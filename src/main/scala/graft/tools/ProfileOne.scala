@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Isolated timing for one registered query: Bench-identical session,
   * N repetitions, per-rep times — separates a query's own cost from
@@ -14,25 +12,15 @@ object ProfileOne {
     val reps = if (args.length > 2) args(2).toInt else 4
     // GRAFT_PROFILE_CONF="k=v;k=v": extra session confs for A/B runs —
     // lets one binary compare e.g. AQE coalescing policies without a
-    // recompile. Applied AFTER the Bench-identical base confs.
+    // recompile. Applied AFTER Bench's confs.
     val extra = sys.env.get("GRAFT_PROFILE_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
       .map { kv =>
         val Array(k, v) = kv.split("=", 2)
         (k, v)
       }
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) =>
-      b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      Session.tmpfsLocalDir +: extra: _*)
     val fn = SparkEntry.queries(name)
     // GRAFT_PROFILE_CLEAR_MEMOS=1: drop the sweep-output memos before
     // every rep (Bench's between-pass reset) so each rep is a COLD

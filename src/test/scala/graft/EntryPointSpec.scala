@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * keeps incremental ingest to one path, the batch `pipeline.Runner`: no
   * source uses Spark's streaming API; and concurrent Spark jobs to one
   * mechanism, `ops.Staging.concurrently`, whose threads inherit the
-  * caller's local properties. */
+  * caller's local properties; and the Spark session to one recipe,
+  * `Session.local`. */
 class EntryPointSpec extends AnyFunSuite {
 
   private val entryPoints = Set(
@@ -47,5 +48,9 @@ class EntryPointSpec extends AnyFunSuite {
   test("only Staging.concurrently starts threads") {
     assert((filesWith("scala.concurrent"), filesWith("Executors.")) ==
       ((Set.empty[String], Set("ops/Staging.scala"))))
+  }
+
+  test("only graft.Session builds a SparkSession") {
+    assert(filesWith("SparkSession.builder") == Set("Session.scala"))
   }
 }

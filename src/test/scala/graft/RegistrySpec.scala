@@ -4,22 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the deployment-grade SQL surface: the test session is built the
-      // way a cluster user would build theirs, so specs can assert the
-      // config-only path end-to-end (GraftExtensionsSpec)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the deployment-grade SQL surface: the test session is built by the
+  // mains' recipe, which loads graft.GraftExtensions the way a cluster
+  // user would, so specs can assert the config-only path end-to-end
+  // (GraftExtensionsSpec)
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 class RegistrySpec extends AnyFunSuite {

@@ -271,29 +271,6 @@ class SinksExtractSpec extends AnyFunSuite {
       "re-applying the same batch must be a no-op")
   }
 
-  test("JDBC sink round-trips via embedded Derby, drops lineage, idempotent (S8)") {
-    import spark.implicits._
-    val url = "jdbc:derby:memory:graftdb;create=true"
-    val props = new java.util.Properties()
-    val df = Seq((1L, "alice", 101L), (2L, "bob", 102L))
-      .toDF("user_id", "login", "github_user_id")
-
-    Sinks.writeJdbc(Seq("t_users" -> df), url, props)
-    val back = spark.read.jdbc(url, "t_users", props)
-    // lineage columns dropped before load (load.py:57 TODO)
-    assert(back.columns.toSet == Set("user_id", "login"))
-    assert(back.select("user_id", "login").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet ==
-      Set((1L, "alice"), (2L, "bob")))
-
-    // overwrite converges: a re-load of the same batch is a no-op
-    Sinks.writeJdbc(Seq("t_users" -> df), url, props)
-    val again = spark.read.jdbc(url, "t_users", props)
-    assert(again.select("user_id", "login").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet ==
-      Set((1L, "alice"), (2L, "bob")))
-  }
-
   test("JDBC MERGE upserts through Derby and pins the T-SQL dialect text") {
     import spark.implicits._
     val url = "jdbc:derby:memory:graftmerge;create=true"
@@ -327,39 +304,6 @@ class SinksExtractSpec extends AnyFunSuite {
         "WHEN MATCHED THEN UPDATE SET t.[login] = s.[login] " +
         "WHEN NOT MATCHED THEN INSERT ([user_id], [login]) " +
         "VALUES (s.[user_id], s.[login]);")
-  }
-
-  test("co-bucketed warehouse tables join with no exchange in the plan") {
-    val sf = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_bucketed").toString
-    val orders = graft.T(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    val cust = graft.T(spark, sf, "customer").select("c_custkey", "c_name")
-    Sinks.writeBucketedTable(orders, "w_orders", "o_custkey", 4,
-      Some(s"$tmp/w_orders"))
-    Sinks.writeBucketedTable(cust, "w_customer", "c_custkey", 4,
-      Some(s"$tmp/w_customer"))
-
-    val expected = orders.join(cust,
-      col("o_custkey") === col("c_custkey")).count()
-
-    val conf = spark.conf
-    val oldBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val oldAqe = conf.get("spark.sql.adaptive.enabled")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      val j = spark.table("w_orders")
-        .join(spark.table("w_customer"), col("o_custkey") === col("c_custkey"))
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"co-bucketed join must not shuffle:\n$plan")
-      assert(j.count() == expected)
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
-      conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.sql("DROP TABLE IF EXISTS w_orders")
-      spark.sql("DROP TABLE IF EXISTS w_customer")
-    }
   }
 
   test("executor-side fan-out plans one scan node, not an N-branch union") {
@@ -400,6 +344,37 @@ class SinksExtractSpec extends AnyFunSuite {
     assert(eligible == Seq("ok"))
     val branches = Extract.extractBranches(spark, fetcher, cfg, eligible)
     assert(branches.select("repo_name").head().getString(0) == "ok")
+  }
+
+  test("issues fan-out tags each repo's rows and parses the raw issue schema") {
+    val fetcher: Extract.Fetcher = (path, page) => {
+      val repo = path.split('/')(3)
+      val n = repo.last.asDigit
+      if (page > 1) None
+      else Some(s"""[{"id": ${10 * n}, "number": 1, "title": "t-$repo",
+                   | "user": {"id": $n, "login": "u$n"}, "state": "open",
+                   | "labels": [{"name": "bug"}]},
+                   |{"id": ${10 * n + 1}, "number": 2, "title": "t2-$repo",
+                   | "pull_request": {"merged_at": "2024-01-0${n}T00:00:00Z"},
+                   | "unknown_field": true}]""".stripMargin)
+    }
+    val issues = Extract.extractIssues(
+      spark, fetcher, Extract.Config("o"), Seq("r1", "r2"))
+    assert(issues.schema.fieldNames.toSeq ==
+      Schemas.issuesRaw.fieldNames.filterNot(_ == "repo_name").toSeq ++
+        Seq("_ingest_ord", "repo_name"))
+    val rows = issues
+      .select("repo_name", "id", "number", "title", "user.login",
+        "pull_request.merged_at", "labels.name", "_ingest_ord")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getString(3), Option(r.getString(4)), Option(r.getString(5)),
+        Option(r.getSeq[String](6)), r.getLong(7)))
+      .toSet
+    assert(rows == Set(
+      ("r1", 10L, 1L, "t-r1", Some("u1"), None, Some(Seq("bug")), 0L),
+      ("r1", 11L, 2L, "t2-r1", None, Some("2024-01-01T00:00:00Z"), None, 1L),
+      ("r2", 20L, 1L, "t-r2", Some("u2"), None, Some(Seq("bug")), 0L),
+      ("r2", 21L, 2L, "t2-r2", None, Some("2024-01-02T00:00:00Z"), None, 1L)))
   }
 
   /** In-process HTTP stub on a real socket for the [[Extract.http]]

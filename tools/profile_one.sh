@@ -2,7 +2,8 @@
 # Run graft.tools.ProfileOne java-direct (no sbt lock) against compiled
 # classes. Usage:
 #   tools/profile_one.sh <gate> [sfDir] [reps]
-# Env passthrough: GRAFT_PROFILE_CONF, GRAFT_PROFILE_CLEAR_MEMOS, PROFILE_MEM.
+# Env passthrough: SPARK_GRAFT_CPUS (default 32, as Bench), GRAFT_PROFILE_CONF,
+# GRAFT_PROFILE_CLEAR_MEMOS, PROFILE_MEM.
 set -u
 GATE="${1:?gate name}"
 SF="${2:-/root/testdata/sf0.1}"
